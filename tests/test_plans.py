@@ -413,12 +413,14 @@ def test_explicit_bloom_probe_sits_below_the_verify_join(spark):
 
 
 def test_semantic_dedup_broadcast_assignment_and_chunked_join(spark, monkeypatch):
-    """SemDeDup plan hygiene: the ONLY cross join is the broadcast of
-    the 16-row frozen cell frame (assignment is a map pass over the
-    corpus); the dominance stage is an equi-join keyed by
+    """SemDeDup plan hygiene: assignment to the 16 frozen literal
+    cells is a map pass over the corpus with no cross join at all,
+    and the dominance stage is ONE grouped Arrow pass keyed by
     (cell, chunk) — never a cartesian/nested-loop pair expansion.
     materialize_and_release is stubbed so the PRE-checkpoint pipeline
     is what gets inspected (the ANN vacuous-test lesson)."""
+    import re
+
     from workshop3_etl_spark.operators import similarity
 
     def passthrough(result, *frames):
@@ -430,16 +432,19 @@ def test_semantic_dedup_broadcast_assignment_and_chunked_join(spark, monkeypatch
     plan = _plan(similarity.sim_semantic_dedup_clusters(spark, SF_CORRECT))
     assert "Join" in plan  # the real pipeline survived (not a scan)
     assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan  # no crossJoin anywhere
     assert "BatchEvalPython" not in plan
-    # dominance join keyed by (cell, chunk): the equi-join's key list
-    # itself must carry the chunk column (a projection mentioning
-    # chunk is not enough — dropping chunk from the join breaks the
-    # O(n*cap) bound while still passing the assertions above)
-    import re
-
-    assert re.search(
-        r"keys \[2\]: \[cell#\d+, chunk#\d+", plan
-    ), plan[:2000]
+    # exactly one dominance kernel, grouped by (cell, chunk) and nothing
+    # else: the group key itself must carry the chunk column (dropping
+    # chunk breaks the O(n*cap) bound while still passing the
+    # assertions above)
+    kernels = re.findall(
+        r"^\(\d+\) FlatMapGroupsInArrow\nInput .*\nArguments: (\[[^\]]*\])",
+        plan,
+        re.M,
+    )
+    assert len(kernels) == 1, plan[:2000]
+    assert re.fullmatch(r"\[cell#\d+, chunk#\d+L?\]", kernels[0]), kernels
 
 
 def test_aqe_skew_join_splits_hot_partition(spark):
@@ -801,10 +806,13 @@ def test_substring_runs_single_documents_scan(spark, monkeypatch):
 
 def test_kmeans_final_step_is_distributed(spark, monkeypatch):
     """ml_kmeans_lloyd_embeddings: the RETURNED plan must be the last
-    Lloyd step as engine ops — a real shuffle aggregate over the
-    posexploded (cell, dim) pairs riding the persisted grid frame —
-    not a driver-assembled literal result; and assignment must stay
-    JVM-side (no Python eval operators)."""
+    Lloyd step as engine ops — one Arrow batch pass (assignment plus
+    per-batch (cell, dim) partial sums) riding the persisted grid
+    frame, then a real (cell, dim) shuffle aggregate — not a
+    driver-assembled literal result; and no per-row Python eval
+    operators."""
+    import re
+
     from workshop3_etl_spark.functions import cache as C
     from workshop3_etl_spark.plans import registry
 
@@ -825,7 +833,12 @@ def test_kmeans_final_step_is_distributed(spark, monkeypatch):
     registry.get("ml_kmeans_lloyd_embeddings").fn(spark, SF_SMOKE)
     plan = captured["plan"]
     assert "InMemoryTableScan" in plan, plan  # rides the grid cache
-    assert "Generate explode" in plan or "Generate posexplode" in plan, plan
-    assert "HashAggregate" in plan or "SortAggregate" in plan, plan
+    assert plan.count("MapInArrow _step_batches") == 1, plan
+    assert re.search(
+        r"Exchange hashpartitioning\(cell#\d+, dim#\d+, \d+\)", plan
+    ), plan
+    assert re.search(
+        r"HashAggregate\(keys=\[cell#\d+, dim#\d+\], functions=\[sum\(s#", plan
+    ), plan
     assert "BatchEvalPython" not in plan
     assert "ArrowEvalPython" not in plan

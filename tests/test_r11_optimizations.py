@@ -498,3 +498,41 @@ def test_arrow_bigram_partials_match_lead_window(spark):
         .collect()
     }
     assert len(old) > 0 and new == old
+
+
+def test_arrow_kmeans_lloyd_step_matches_expression_form(spark):
+    """ml's k-means Lloyd step (r11 session 2) assigns and sums in one
+    Arrow batch pass. Pin its (cell, dim, s, n) rows against the
+    pre-rewrite interpreted-fold assignment plus posexplode aggregate,
+    integer for integer, on the grid corpus split over several
+    partitions (so per-batch partials are merged). The centroids add
+    an exact tie (cell 1 duplicates cell 0: the lowest cell must win,
+    leaving cell 1 empty) and an unreachable cell (2)."""
+    from workshop3_etl_spark.ml import (
+        _KM_K,
+        _km_assign,
+        _km_grid_frame,
+        _km_lloyd_step_arrow,
+        _km_seed_cents,
+        _km_update_sums,
+    )
+
+    g = _km_grid_frame(spark, SF_CORRECT).repartition(3).persist()
+    try:
+        cents = _km_seed_cents(g, _KM_K)
+        cents[1] = list(cents[0])
+        cents[2] = [1 << 22] * len(cents[0])
+        cols = ("cell", "dim", "s", "n")
+        old = sorted(
+            tuple(r[c] for c in cols)
+            for r in _km_update_sums(_km_assign(g, cents)).collect()
+        )
+        new = sorted(
+            tuple(r[c] for c in cols)
+            for r in _km_lloyd_step_arrow(g, cents).collect()
+        )
+        cells = {r[0] for r in old}
+        assert len(cells) > 4 and not cells & {1, 2}
+        assert new == old
+    finally:
+        g.unpersist()

@@ -400,10 +400,9 @@ def test_stump_histogram_state_equals_batch(spark, tmp_path):
     must equal the one-shot batch histogram bit-for-bit (per-bin
     sums are associative under any micro-batch split)."""
     from workshop3_etl_spark.ml import _STUMP_BIN_W, _STUMP_CENTS
-    from workshop3_etl_spark.sources.tables import load_table
+    from workshop3_etl_spark.sources.tables import load_table, table_stream
     from workshop3_etl_spark.streaming.batch_equivalent import (
         _few_state_partitions,
-        _lineitem_stream,
     )
     from workshop3_etl_spark.streaming.rollup import (
         maintain_stump_hist,
@@ -415,7 +414,7 @@ def test_stump_histogram_state_equals_batch(spark, tmp_path):
     with _few_state_partitions(spark):
         maintain_stump_hist(
             spark,
-            _lineitem_stream(spark, SF_SMOKE),
+            table_stream(spark, SF_SMOKE, "lineitem"),
             state,
             str(tmp_path / "ck"),
         )

@@ -1,9 +1,17 @@
 """Parquet star-schema loaders for the driver testdata (TESTDATA.md).
 
 Tables: region nation customer supplier part orders lineitem events
-documents embeddings. All loads are plain ``spark.read.parquet`` so
-Catalyst gets full pushdown/pruning; no schema inference cost (parquet
-footers carry the schema).
+documents embeddings. All loads are plain parquet scans, so Catalyst
+gets full pushdown/pruning.
+
+A bare ``spark.read.parquet`` infers the schema with a one-task Spark
+job that reads the footer. ``parquet_schema`` runs that inference once
+per file per process: it memoizes the inferred ``StructType`` under the
+file's absolute path, inode, size and mtime (ns) plus the session confs
+that change Parquet inference, and every load then reads with that
+schema and starts no job. A path ``os.stat`` cannot see (an
+object-store URI) or that is not a regular file is inferred on every
+call and never memoized. Only the schema is kept, never any data.
 
 At cluster scale the same API points at an object-store prefix; nothing
 here assumes local files.
@@ -11,7 +19,11 @@ here assumes local files.
 
 from __future__ import annotations
 
+import os
+import stat
+
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLE_NAMES = (
     "region",
@@ -51,6 +63,17 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return _load_raw(spark, sf_dir, name)
 
 
+def table_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """File-source stream over one table, with the schema a batch load
+    infers. File sources need a directory, so the stream reads
+    ``sf_dir`` glob-filtered down to the table's file."""
+    return (
+        spark.readStream.schema(parquet_schema(spark, f"{sf_dir}/{name}.parquet"))
+        .option("pathGlobFilter", f"{name}.parquet")
+        .parquet(sf_dir)
+    )
+
+
 def scan_parallel(
     spark: SparkSession, sf_dir: str, name: str, per_part_rows: int = 64
 ) -> DataFrame:
@@ -79,8 +102,6 @@ def scan_parallel(
     df = _load_raw(spark, sf_dir, name)
     n = spark.sparkContext.defaultParallelism
     try:
-        import os
-
         import pyarrow.parquet as pq
 
         # read_metadata (not ParquetFile): no file handle left open on
@@ -154,6 +175,40 @@ def normalize_event_ts(df: DataFrame) -> DataFrame:
     return df
 
 
+# Session confs that change the schema Spark infers from a parquet
+# footer; their current values are part of the memo key.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+_SCHEMAS: dict[tuple, StructType] = {}
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema ``spark.read.parquet(path)`` infers, inferred once per
+    file per process (see the module docstring for the memo key)."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        st = None
+    if st is None or not stat.S_ISREG(st.st_mode):
+        return spark.read.parquet(path).schema
+    key = (
+        os.path.abspath(path),
+        st.st_ino,
+        st.st_size,
+        st.st_mtime_ns,
+        # unset -> None, which stands for the version's default
+        tuple(spark.conf.get(c, None) for c in _INFERENCE_CONFS),
+    )
+    schema = _SCHEMAS.get(key)
+    if schema is None:
+        schema = _SCHEMAS[key] = spark.read.parquet(path).schema
+    return schema
+
+
 def _load_raw(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # Older Spark rejects TIMESTAMP(NANOS) footers unless this legacy
     # conf is set; 4.1+ ignores it and reads NTZ natively. Set it
@@ -167,7 +222,8 @@ def _load_raw(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # the session timezone; the DuckDB oracle is timezone-naive (UTC
     # semantics), so pin it here too, not only in session.py.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    df = spark.read.schema(parquet_schema(spark, path)).parquet(path)
     if name == "events":
         df = normalize_event_ts(df)
     return df

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from workshop3_etl_spark.plans.registry import register
+from workshop3_etl_spark.sources.tables import normalize_event_ts, table_stream
 
 ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
@@ -91,16 +92,7 @@ ORDER BY window_start, event_type
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events table (nanos ts normalized
     to micros exactly as sources.tables.load_table does)."""
-    from workshop3_etl_spark.sources.tables import normalize_event_ts
-
-    static = spark.read.parquet(f"{sf_dir}/events.parquet")
-    stream = normalize_event_ts(
-        spark.readStream.schema(static.schema)
-        # file sources need a directory; glob-filter down to events
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    return stream
+    return normalize_event_ts(table_stream(spark, sf_dir, "events"))
 
 
 @register("stream_tumbling_hourly_counts", oracle=_TUMBLING_ORACLE)
@@ -376,11 +368,8 @@ def stream_dedup_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     state here; production bounds it with
     ``dropDuplicatesWithinWatermark`` once keys carry event time.
     """
-    static = spark.read.parquet(f"{sf_dir}/documents.parquet")
     stream = (
-        spark.readStream.schema(static.schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
+        table_stream(spark, sf_dir, "documents")
         .select("lang", "source")
         .dropDuplicates(["lang", "source"])
     )
@@ -641,12 +630,7 @@ def stream_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_audit_pairs,
     )
 
-    static = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    stream = (
-        spark.readStream.schema(static.schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
+    stream = table_stream(spark, sf_dir, "documents")
     n_seen = load_table(spark, sf_dir, "documents").count()
     with tempfile.TemporaryDirectory() as workdir:
         with _few_state_partitions(spark):
@@ -1511,16 +1495,6 @@ def stream_stream_left_outer_join_closed(
 # --------------------------------------------------------------------
 
 
-def _embeddings_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the embeddings table."""
-    static = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return (
-        spark.readStream.schema(static.schema)
-        .option("pathGlobFilter", "embeddings.parquet")
-        .parquet(sf_dir)
-    )
-
-
 def _quantizer_refresh_oracle() -> str:
     from workshop3_etl_spark.operators.similarity import (
         _dot_duck,
@@ -1602,7 +1576,7 @@ def stream_kmeans_quantizer_refresh(
         with _few_state_partitions(spark):
             maintain_quantizer(
                 spark,
-                _embeddings_stream(spark, sf_dir),
+                table_stream(spark, sf_dir, "embeddings"),
                 state,
                 f"{workdir}/ck",
             )
@@ -1765,16 +1739,6 @@ def embedding_quantizer_drift(
 # --------------------------------------------------------------------
 
 
-def _documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the documents table."""
-    static = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return (
-        spark.readStream.schema(static.schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
-
-
 def _lm_refresh_oracle() -> str:
     from workshop3_etl_spark.operators.text import (
         _LM_TRAIN_GATE_DUCK,
@@ -1835,7 +1799,7 @@ def stream_lm_bigram_refresh(
         with _few_state_partitions(spark):
             maintain_lm(
                 spark,
-                _documents_stream(spark, sf_dir),
+                table_stream(spark, sf_dir, "documents"),
                 state,
                 f"{workdir}/ck",
             )
@@ -1954,7 +1918,7 @@ def stream_bm25_index_refresh(
         with _few_state_partitions(spark):
             maintain_bm25(
                 spark,
-                _documents_stream(spark, sf_dir),
+                table_stream(spark, sf_dir, "documents"),
                 state,
                 f"{workdir}/ck",
             )
@@ -2046,7 +2010,7 @@ def stream_covariance_moment_refresh(
         with _few_state_partitions(spark):
             maintain_moments(
                 spark,
-                _embeddings_stream(spark, sf_dir),
+                table_stream(spark, sf_dir, "embeddings"),
                 state,
                 f"{workdir}/ck",
             )
@@ -2123,7 +2087,7 @@ def stream_ngram_novelty_refresh(
         with _few_state_partitions(spark):
             maintain_novelty(
                 spark,
-                _documents_stream(spark, sf_dir),
+                table_stream(spark, sf_dir, "documents"),
                 state,
                 f"{workdir}/ck",
             )
@@ -2156,16 +2120,6 @@ def stream_ngram_novelty_refresh(
 # --------------------------------------------------------------------
 
 
-def _lineitem_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the lineitem table."""
-    static = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    return (
-        spark.readStream.schema(static.schema)
-        .option("pathGlobFilter", "lineitem.parquet")
-        .parquet(sf_dir)
-    )
-
-
 def _stump_refresh_oracle() -> str:
     from workshop3_etl_spark.ml import _STUMP_ORACLE
 
@@ -2194,7 +2148,7 @@ def stream_stump_histogram_refresh(
         with _few_state_partitions(spark):
             maintain_stump_hist(
                 spark,
-                _lineitem_stream(spark, sf_dir),
+                table_stream(spark, sf_dir, "lineitem"),
                 state,
                 f"{workdir}/ck",
             )

@@ -86,17 +86,15 @@ def stream_tws_user_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_streaming.py when the runner's protobuf dependency is
     present.
     """
+    from workshop3_etl_spark.sources.tables import table_stream
     from workshop3_etl_spark.streaming.batch_equivalent import (
         ROCKSDB_PROVIDER,
         _few_state_partitions,
         state_store_provider,
     )
 
-    static = spark.read.parquet(f"{sf_dir}/events.parquet")
     stream = (
-        spark.readStream.schema(static.schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
+        table_stream(spark, sf_dir, "events")
         .select(
             "user_id",
             (F.col("value").cast("decimal(18,2)") * 100)
