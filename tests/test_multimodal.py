@@ -1,4 +1,4 @@
-"""Multimodal plumbing tests: binary schema, mapInPandas batch
+"""Multimodal plumbing tests: binary schema, Arrow batch kernel
 contract, and the stubbed decode kernel's pinned semantics."""
 
 from __future__ import annotations
@@ -25,10 +25,15 @@ def test_decode_stub_checksum_pinned(spark):
     """The fake header parse is deterministic: checksum == byte-sum
     mod 2^31 recomputed driver-side for a sample."""
     media = media_frame(spark, SF_SMOKE).limit(20).collect()
-    from workshop3_etl_spark.operators.multimodal import decode_media_stub
-    import pandas as pd
+    from workshop3_etl_spark.operators.multimodal import (
+        _DECODE_SCHEMA,
+        decode_media_stub,
+    )
+    import pyarrow as pa
 
-    pdf = pd.DataFrame(
+    from workshop3_etl_spark.functions.arrow_kernel import arrow_schema, to_batch
+
+    batch = pa.RecordBatch.from_pydict(
         {
             "media_id": [r["media_id"] for r in media],
             "media_type": [r["media_type"] for r in media],
@@ -36,7 +41,9 @@ def test_decode_stub_checksum_pinned(spark):
             "payload": [bytes(r["payload"]) for r in media],
         }
     )
-    out = next(decode_media_stub(iter([pdf])))
+    out = to_batch(
+        decode_media_stub(batch), arrow_schema(_DECODE_SCHEMA)
+    ).to_pandas()
     for i, r in enumerate(media):
         assert out["checksum_mod"][i] == sum(bytes(r["payload"])) % 2_147_483_647
         assert out["header_byte"][i] == bytes(r["payload"])[0]
@@ -318,13 +325,15 @@ def test_real_decode_rejects_truncated_wav():
         decode_media_real(full[:36])
 
 
-def test_wav_samples_roundtrip_and_features():
+def test_wav_samples_roundtrip_and_features(spark):
     """_wav_samples must invert _encode_wav exactly, and the feature
     kernel arithmetic must match hand-computed energy / strict
     zero-crossing counts (zeros break runs without counting)."""
-    import pandas as pd
+    import pyarrow as pa
 
+    from workshop3_etl_spark.functions.arrow_kernel import arrow_schema, to_batch
     from workshop3_etl_spark.operators.multimodal import (
+        _WAV_FEATURES_SCHEMA,
         _WAV_OFS,
         _WAV_SCALE,
         _encode_wav,
@@ -337,14 +346,16 @@ def test_wav_samples_roundtrip_and_features():
     samples = _wav_samples(_encode_wav(data))
     assert samples == [(b - _WAV_OFS) * _WAV_SCALE for b in data]
 
-    pdf = pd.DataFrame(
+    batch = pa.RecordBatch.from_pydict(
         {
             "media_id": [1, 2],
             "media_type": ["audio/wav", "audio/wav"],
             "payload": [_encode_wav(data), _encode_wav(b"")],
         }
     )
-    out = pd.concat(list(wav_features_kernel(iter([pdf]))))
+    out = to_batch(
+        wav_features_kernel(batch), arrow_schema(_WAV_FEATURES_SCHEMA)
+    ).to_pandas()
     row = out[out.media_id == 1].iloc[0]
     expect_s = [(b - _WAV_OFS) * _WAV_SCALE for b in data]
     assert row["n_samples"] == len(expect_s)
@@ -388,16 +399,18 @@ def test_wav_samples_skips_odd_chunk_with_pad_byte():
     ]
 
 
-def test_bmp_dhash_kernel_known_image_and_text_prediction():
+def test_bmp_dhash_kernel_known_image_and_text_prediction(spark):
     """dHash ground truths: (a) a hand-built horizontal-gradient BMP
     whose every gradient sign is positive left-to-right must hash to
     all-ones columns; (b) for synthesized payloads the kernel's
     decode-path hash must equal the hash predicted straight from the
     source bytes (the oracle's derivation, here in Python)."""
-    import pandas as pd
+    import pyarrow as pa
 
+    from workshop3_etl_spark.functions.arrow_kernel import arrow_schema, to_batch
     from workshop3_etl_spark.operators.multimodal import (
         _BMP_H_MOD,
+        _DHASH_SCHEMA,
         _BMP_W_MOD,
         _encode_bmp,
         _pack_bmp,
@@ -411,30 +424,28 @@ def test_bmp_dhash_kernel_known_image_and_text_prediction():
         min(255, 8 - x) for y in range(h) for x in range(w) for _ in range(3)
     )
     grad = _pack_bmp(w, h, px)
-    out = list(
+    out = to_batch(
         bmp_dhash_kernel(
-            iter([pd.DataFrame({"media_id": [1], "payload": [grad]})])
-        )
-    )[0]
+            pa.RecordBatch.from_pydict({"media_id": [1], "payload": [grad]})
+        ),
+        arrow_schema(_DHASH_SCHEMA),
+    ).to_pandas()
     assert out["dhash"][0] == "1" * 64
 
     # (b) decode-path hash == source-byte prediction for real texts.
     texts = ["hello world this is a test doc", "a" * 37, "xyz" * 50]
     payloads = [_encode_bmp(t.encode()) for t in texts]
-    out = list(
+    out = to_batch(
         bmp_dhash_kernel(
-            iter(
-                [
-                    pd.DataFrame(
-                        {
-                            "media_id": list(range(len(texts))),
-                            "payload": payloads,
-                        }
-                    )
-                ]
+            pa.RecordBatch.from_pydict(
+                {
+                    "media_id": list(range(len(texts))),
+                    "payload": payloads,
+                }
             )
-        )
-    )[0]
+        ),
+        arrow_schema(_DHASH_SCHEMA),
+    ).to_pandas()
     for t, got in zip(texts, out["dhash"]):
         data = t.encode()
         ln = len(data)
@@ -481,16 +492,18 @@ def test_bmp_dhash_neardup_pigeonhole_and_dup_detection(spark):
     assert row["n_candidate_pairs"] >= row["n_within_3"]
 
 
-def test_bmp_sobel_kernel_matches_numpy_convolution():
+def test_bmp_sobel_kernel_matches_numpy_convolution(spark):
     """Drive the Sobel kernel directly with a hand-built BMP (vertical
     step edge) and check the statistics against an independent numpy
     convolution — the kernel-ground-truth check that does not go
     through the cycling synthesis."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
+    from workshop3_etl_spark.functions.arrow_kernel import arrow_schema, to_batch
     from workshop3_etl_spark.operators.multimodal import (
         _SOBEL_EDGE_THRESH,
+        _SOBEL_SCHEMA,
         _pack_bmp,
         bmp_sobel_kernel,
     )
@@ -504,15 +517,12 @@ def test_bmp_sobel_kernel_matches_numpy_convolution():
             px += bytes((v, v, v))
     payload = _pack_bmp(w, h, bytes(px))
 
-    out = pd.concat(
-        list(
-            bmp_sobel_kernel(
-                iter(
-                    [pd.DataFrame({"media_id": [7], "payload": [payload]})]
-                )
-            )
-        )
-    )
+    out = to_batch(
+        bmp_sobel_kernel(
+            pa.RecordBatch.from_pydict({"media_id": [7], "payload": [payload]})
+        ),
+        arrow_schema(_SOBEL_SCHEMA),
+    ).to_pandas()
     assert len(out) == 1
     row = out.iloc[0]
     assert (row["width"], row["height"]) == (w, h)

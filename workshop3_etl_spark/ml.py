@@ -1181,57 +1181,35 @@ def _km_lloyd_step_arrow(g: DataFrame, cents: list[list[int]]) -> DataFrame:
     is identical integer for integer (pinned by
     tests/test_r11_optimizations.py)."""
     import numpy as np
-    import pyarrow as pa
 
-    C = np.asarray(cents, dtype=np.int64)  # (K, D)
-    arrow_schema = pa.schema(
-        [
-            pa.field("cell", pa.int32()),
-            pa.field("dim", pa.int32()),
-            pa.field("s", pa.int64()),
-            pa.field("n", pa.int64()),
-        ]
+    from workshop3_etl_spark.functions.arrow_kernel import (
+        map_batches,
+        vectors,
     )
 
-    def _step_batches(batches):
-        for b in batches:
-            m = b.num_rows
-            if m == 0:
-                continue
-            col = b.column("g")
-            if isinstance(col, pa.ChunkedArray):  # pragma: no cover
-                col = col.combine_chunks()
-            vals = np.asarray(col.flatten(), dtype=np.int64)
-            G = vals.reshape(m, vals.size // m)
-            d = (G[:, None, :] - C[None, :, :]).astype(np.int64)
-            dist2 = np.einsum("mkd,mkd->mk", d, d)
-            cell = dist2.argmin(axis=1)  # first min = lowest cell
-            k, dimn = C.shape
-            s = np.zeros((k, dimn), dtype=np.int64)
-            n = np.zeros(k, dtype=np.int64)
-            np.add.at(s, cell, G)
-            np.add.at(n, cell, 1)
-            hit = n > 0
-            cells = np.nonzero(hit)[0]
-            out_cell = np.repeat(cells, dimn).astype(np.int32)
-            out_dim = np.tile(
-                np.arange(1, dimn + 1, dtype=np.int32), len(cells)
-            )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out_cell, pa.int32()),
-                    pa.array(out_dim, pa.int32()),
-                    pa.array(s[hit].reshape(-1), pa.int64()),
-                    pa.array(
-                        np.repeat(n[hit], dimn).astype(np.int64),
-                        pa.int64(),
-                    ),
-                ],
-                schema=arrow_schema,
-            )
+    C = np.asarray(cents, dtype=np.int64)  # (K, D)
 
-    part = g.select("g").mapInArrow(
-        _step_batches, "cell int, dim int, s bigint, n bigint"
+    def _step_batches(batch):
+        G = vectors(batch, "g", np.int64)
+        d = (G[:, None, :] - C[None, :, :]).astype(np.int64)
+        dist2 = np.einsum("mkd,mkd->mk", d, d)
+        cell = dist2.argmin(axis=1)  # first min = lowest cell
+        k, dimn = C.shape
+        s = np.zeros((k, dimn), dtype=np.int64)
+        n = np.zeros(k, dtype=np.int64)
+        np.add.at(s, cell, G)
+        np.add.at(n, cell, 1)
+        hit = n > 0
+        cells = np.nonzero(hit)[0]
+        return [
+            np.repeat(cells, dimn),
+            np.tile(np.arange(1, dimn + 1), len(cells)),
+            s[hit].reshape(-1),
+            np.repeat(n[hit], dimn),
+        ]
+
+    part = map_batches(
+        g, ["g"], "cell int, dim int, s bigint, n bigint", _step_batches
     )
     return part.groupBy("cell", "dim").agg(
         F.sum("s").alias("s"), F.sum("n").cast("long").alias("n")

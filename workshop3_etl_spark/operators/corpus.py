@@ -2357,63 +2357,49 @@ def _novelty_partials_arrow(docs: DataFrame) -> DataFrame:
     the same UTF-8 gram bytes as ``md5(cast(concat_ws(' ', slice(
     toks, i, 3)) as binary))``), and the gram shuffle shrinks from
     instance-sized to batch-vocabulary-sized."""
-    import pyarrow as pa
+    from hashlib import md5 as _md5
+
+    from workshop3_etl_spark.functions.arrow_kernel import map_batches
 
     shards = _NOVELTY_SHARDS
-    arrow_schema = pa.schema(
-        [
-            pa.field("g", pa.string()),
-            pa.field("shard", pa.int64()),
-            pa.field("n_docs", pa.int64()),
-            pa.field("n_inst", pa.int64()),
-        ]
-    )
 
-    def _partial_batches(batches):
-        from hashlib import md5 as _md5
-
-        for b in batches:
-            if b.num_rows == 0:
+    def _partial_batches(b):
+        gmin: dict[str, int] = {}
+        ndocs = [0] * shards
+        ninst = [0] * shards
+        join = " ".join
+        for d, t in zip(
+            b.column("doc_id").to_pylist(), b.column("text").to_pylist()
+        ):
+            shard = d % shards
+            toks = [x for x in t.split(" ") if x]
+            n = len(toks)
+            ndocs[shard] += 1
+            if n < 3:
                 continue
-            doc_ids = b.column("doc_id").to_pylist()
-            texts = b.column("text").to_pylist()
-            gmin: dict[str, int] = {}
-            ndocs = [0] * shards
-            ninst = [0] * shards
-            join = " ".join
-            for d, t in zip(doc_ids, texts):
-                shard = d % shards
-                toks = [x for x in t.split(" ") if x]
-                n = len(toks)
-                ndocs[shard] += 1
-                if n < 3:
-                    continue
-                ninst[shard] += n - 2
-                for i in range(n - 2):
-                    g = _md5(join(toks[i : i + 3]).encode()).hexdigest()
-                    prev = gmin.get(g)
-                    if prev is None or shard < prev:
-                        gmin[g] = shard
-            # counter rows only for shards this batch saw: a shard
-            # with no documents anywhere must stay absent from the
-            # curve, exactly as the former groupBy produced
-            seen = [s for s in range(shards) if ndocs[s] > 0]
-            out_g = list(gmin.keys()) + [None] * len(seen)
-            out_shard = list(gmin.values()) + seen
-            zeros = [0] * len(gmin)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out_g, pa.string()),
-                    pa.array(out_shard, pa.int64()),
-                    pa.array(zeros + [ndocs[s] for s in seen], pa.int64()),
-                    pa.array(zeros + [ninst[s] for s in seen], pa.int64()),
-                ],
-                schema=arrow_schema,
-            )
+            ninst[shard] += n - 2
+            for i in range(n - 2):
+                g = _md5(join(toks[i : i + 3]).encode()).hexdigest()
+                prev = gmin.get(g)
+                if prev is None or shard < prev:
+                    gmin[g] = shard
+        # counter rows only for shards this batch saw: a shard
+        # with no documents anywhere must stay absent from the
+        # curve, exactly as the former groupBy produced
+        seen = [s for s in range(shards) if ndocs[s] > 0]
+        zeros = [0] * len(gmin)
+        return [
+            list(gmin.keys()) + [None] * len(seen),
+            list(gmin.values()) + seen,
+            zeros + [ndocs[s] for s in seen],
+            zeros + [ninst[s] for s in seen],
+        ]
 
-    return docs.select("doc_id", "text").mapInArrow(
-        _partial_batches,
+    return map_batches(
+        docs,
+        ["doc_id", "text"],
         "g string, shard bigint, n_docs bigint, n_inst bigint",
+        _partial_batches,
     )
 
 

@@ -1849,7 +1849,7 @@ def substring_run_seeds(docs: DataFrame) -> DataFrame:
     evaluates INTERPRETED (CodegenFallback) at a measured ~6 us per
     expression node per element (tools/probe_seeds2.py: the slice
     alone cost ~1.5s of the ~2s pass; an element_at formulation was
-    8x worse). mapInArrow computes the SAME md5 hex strings over the
+    8x worse). The Arrow kernel computes the SAME md5 hex strings over the
     SAME gram bytes (Python str.split(' ') + filter == the engine's
     ``filter(split(text, ' '), x -> x != '')`` for the single-space
     delimiter; hashlib.md5 over UTF-8 == Spark md5 == DuckDB md5), so
@@ -1859,50 +1859,34 @@ def substring_run_seeds(docs: DataFrame) -> DataFrame:
     column-pruning rule), and the per-batch work is a plain loop over
     positions at CPython speed (~1.5 us/gram) instead of ~25 us/gram
     of interpreted Catalyst dispatch."""
-    import pyarrow as pa
+    from hashlib import md5 as _md5
+
+    from workshop3_etl_spark.functions.arrow_kernel import map_batches
 
     k = K_SUBRUN
-    out_schema = "doc_id bigint, pos int, h string"
-    arrow_schema = pa.schema(
-        [
-            pa.field("doc_id", pa.int64()),
-            pa.field("pos", pa.int32()),
-            pa.field("h", pa.string()),
-        ]
-    )
 
-    def _seed_batches(batches):
-        from hashlib import md5 as _md5
+    def _seed_batches(b):
+        out_doc: list[int] = []
+        out_pos: list[int] = []
+        out_h: list[str] = []
+        join = " ".join
+        for d, t in zip(
+            b.column("doc_id").to_pylist(), b.column("text").to_pylist()
+        ):
+            toks = [x for x in t.split(" ") if x]
+            for i in range(len(toks) - k + 1):
+                out_doc.append(d)
+                out_pos.append(i + 1)
+                out_h.append(
+                    _md5(join(toks[i : i + k]).encode()).hexdigest()
+                )
+        return [out_doc, out_pos, out_h]
 
-        for b in batches:
-            doc_ids = b.column("doc_id").to_pylist()
-            texts = b.column("text").to_pylist()
-            out_doc: list[int] = []
-            out_pos: list[int] = []
-            out_h: list[str] = []
-            for d, t in zip(doc_ids, texts):
-                toks = [x for x in t.split(" ") if x]
-                n = len(toks)
-                if n < k:
-                    continue
-                join = " ".join
-                for i in range(n - k + 1):
-                    out_doc.append(d)
-                    out_pos.append(i + 1)
-                    out_h.append(
-                        _md5(join(toks[i : i + k]).encode()).hexdigest()
-                    )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out_doc, pa.int64()),
-                    pa.array(out_pos, pa.int32()),
-                    pa.array(out_h, pa.string()),
-                ],
-                schema=arrow_schema,
-            )
-
-    return docs.select("doc_id", "text").mapInArrow(
-        _seed_batches, out_schema
+    return map_batches(
+        docs,
+        ["doc_id", "text"],
+        "doc_id bigint, pos int, h string",
+        _seed_batches,
     )
 
 

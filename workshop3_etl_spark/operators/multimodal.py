@@ -2,14 +2,16 @@
 
 The 100 TB-pipeline pattern for image/audio/video (BASELINE.json north
 star): store media as opaque ``binary`` columns beside typed metadata;
-decode / feature-extract / resize / frame-sample run as Arrow-batched
-Pandas functions over ``mapInPandas`` so the heavy Python work streams
-through fixed-size batches instead of materializing partitions.
+decode / feature-extract / resize / frame-sample run as Arrow batch
+kernels (``functions.arrow_kernel.map_batches``) so the heavy Python
+work streams through fixed-size batches instead of materializing
+partitions. Each kernel takes one ``pa.RecordBatch`` and returns its
+output columns in the order of a DDL schema declared once beside it.
 
-The container has no image/audio codecs, so the decode kernel is a
-clearly-marked STUB (deterministic fake header parse +
-NotImplementedError for real decoding) — but everything Spark-side is
-real and tested: the binary schema, the mapInPandas signature, batch
+The stub decode kernel is a clearly-marked STUB (deterministic fake
+header parse); the real BMP/WAV codecs below are stdlib-only, and
+other formats raise NotImplementedError — but everything Spark-side
+is real and tested: the binary schema, the kernel contract, batch
 shapes, partition behavior, and the metadata aggregates.
 
 Payloads are synthesized from documents.text bytes (the only blob
@@ -18,14 +20,12 @@ source in the testdata).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
+from workshop3_etl_spark.functions.arrow_kernel import map_batches
 from workshop3_etl_spark.plans.registry import register
 from workshop3_etl_spark.sources.tables import load_table
 
@@ -48,39 +48,27 @@ def media_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DECODE_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("media_type", T.StringType()),
-        T.StructField("n_bytes", T.LongType()),
-        T.StructField("header_byte", T.IntegerType()),
-        T.StructField("checksum_mod", T.LongType()),
-    ]
+_DECODE_SCHEMA = (
+    "media_id bigint, media_type string, n_bytes bigint,"
+    " header_byte int, checksum_mod bigint"
 )
 
 
-def decode_media_stub(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """STUB decode kernel (mapInPandas contract).
+def decode_media_stub(batch: pa.RecordBatch) -> list:
+    """STUB decode kernel (Arrow batch contract).
 
     Parses a deterministic fake "header" (first byte + byte-sum mod
     2^31) per payload. A real deployment replaces the body with
     PIL/ffmpeg decoding — same signature, same batch shape.
     """
-    for pdf in batches:
-        out = pd.DataFrame(
-            {
-                "media_id": pdf["media_id"],
-                "media_type": pdf["media_type"],
-                "n_bytes": pdf["n_bytes"],
-                "header_byte": [
-                    int(p[0]) if len(p) else -1 for p in pdf["payload"]
-                ],
-                "checksum_mod": [
-                    int(sum(p) % 2_147_483_647) for p in pdf["payload"]
-                ],
-            }
-        )
-        yield out
+    payloads = batch.column("payload").to_pylist()
+    return [
+        batch.column("media_id"),
+        batch.column("media_type"),
+        batch.column("n_bytes"),
+        [p[0] if len(p) else -1 for p in payloads],
+        [sum(p) % 2_147_483_647 for p in payloads],
+    ]
 
 
 # --------------------------------------------------------------------
@@ -274,7 +262,7 @@ def decode_media_real(payload: bytes) -> dict:
         return out
     raise NotImplementedError(
         "unknown codec (not BMP/WAV) — requires PIL/ffmpeg; wire it "
-        "into decode_real_kernel's mapInPandas body"
+        "into decode_real_kernel"
     )
 
 
@@ -343,7 +331,7 @@ ORDER BY media_type
 
 @register("multimodal_decode_features", oracle=_DECODE_FEATURES_ORACLE)
 def multimodal_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Arrow-batched decode (stub kernel) via mapInPandas, then a
+    """Arrow-batched decode (stub kernel), then a
     JVM-side aggregate over the extracted features. Fully oracled:
     the stub features are pure byte math over the synthetic payload
     (documents.text utf-8 bytes), which DuckDB recomputes from
@@ -351,7 +339,12 @@ def multimodal_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     kernel's checksum semantics row-by-row.
     """
     media = media_frame(spark, sf_dir)
-    decoded = media.mapInPandas(decode_media_stub, schema=_DECODE_SCHEMA)
+    decoded = map_batches(
+        media,
+        ["media_id", "media_type", "n_bytes", "payload"],
+        _DECODE_SCHEMA,
+        decode_media_stub,
+    )
     return (
         decoded.groupBy("media_type")
         .agg(
@@ -374,93 +367,64 @@ def multimodal_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the hash comparison fails.
 # --------------------------------------------------------------------
 
-_MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("media_type", T.StringType()),
-        T.StructField("payload", T.BinaryType()),
-    ]
-)
+_MEDIA_SCHEMA = "media_id bigint, media_type string, payload binary"
 
 
-def encode_media_kernel(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """mapInPandas ingest kernel: document text bytes -> real BMP
+def encode_media_kernel(batch: pa.RecordBatch) -> list:
+    """Ingest kernel: document text bytes -> real BMP
     (doc_id % 3 == 0) or real WAV (doc_id % 3 == 1) payloads."""
-    for pdf in batches:
-        ids: list[int] = []
-        types: list[str] = []
-        blobs: list[bytes] = []
-        for mid, text in zip(pdf["doc_id"], pdf["text"]):
-            data = text.encode("utf-8")
-            if mid % 3 == 0:
-                types.append("image/bmp")
-                blobs.append(_encode_bmp(data))
-            elif mid % 3 == 1:
-                types.append("audio/wav")
-                blobs.append(_encode_wav(data))
-            else:
-                continue
-            ids.append(int(mid))
-        yield pd.DataFrame(
-            {
-                "media_id": pd.Series(ids, dtype="int64"),
-                "media_type": pd.Series(types, dtype="object"),
-                "payload": pd.Series(blobs, dtype="object"),
-            }
-        )
+    ids: list[int] = []
+    types: list[str] = []
+    blobs: list[bytes] = []
+    for mid, text in zip(
+        batch.column("doc_id").to_pylist(), batch.column("text").to_pylist()
+    ):
+        data = text.encode("utf-8")
+        if mid % 3 == 0:
+            types.append("image/bmp")
+            blobs.append(_encode_bmp(data))
+        elif mid % 3 == 1:
+            types.append("audio/wav")
+            blobs.append(_encode_wav(data))
+        else:
+            continue
+        ids.append(mid)
+    return [ids, types, blobs]
 
 
-_DECODE_REAL_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("media_type", T.StringType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("bit_depth", T.IntegerType()),
-        T.StructField("n_samples", T.LongType()),
-        T.StructField("sample_rate", T.IntegerType()),
-        T.StructField("duration_ms", T.LongType()),
-        T.StructField("px_checksum", T.LongType()),
-    ]
+def encode_media(docs: DataFrame) -> DataFrame:
+    """(doc_id, text) -> (media_id, media_type, payload) via
+    encode_media_kernel."""
+    return map_batches(
+        docs, ["doc_id", "text"], _MEDIA_SCHEMA, encode_media_kernel
+    )
+
+
+_MEDIA_COLUMNS = ["media_id", "media_type", "payload"]
+
+
+def _media_rows(batch: pa.RecordBatch):
+    """(media_id, media_type, payload) Python tuples of a media batch."""
+    return zip(*(batch.column(c).to_pylist() for c in _MEDIA_COLUMNS))
+
+
+_DECODE_REAL_SCHEMA = (
+    "media_id bigint, media_type string, width int, height int,"
+    " bit_depth int, n_samples bigint, sample_rate int, duration_ms bigint,"
+    " px_checksum bigint"
 )
 
 
-def decode_real_kernel(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """mapInPandas decode kernel: struct-parse every payload's actual
-    bytes via decode_media_real."""
-    for pdf in batches:
-        feats = [decode_media_real(bytes(p)) for p in pdf["payload"]]
-        yield pd.DataFrame(
-            {
-                "media_id": pdf["media_id"].astype("int64"),
-                "media_type": pdf["media_type"],
-                "width": pd.array(
-                    [f["width"] for f in feats], dtype="Int32"
-                ),
-                "height": pd.array(
-                    [f["height"] for f in feats], dtype="Int32"
-                ),
-                "bit_depth": pd.array(
-                    [f["bit_depth"] for f in feats], dtype="Int32"
-                ),
-                "n_samples": pd.array(
-                    [f["n_samples"] for f in feats], dtype="Int64"
-                ),
-                "sample_rate": pd.array(
-                    [f["sample_rate"] for f in feats], dtype="Int32"
-                ),
-                "duration_ms": pd.array(
-                    [f["duration_ms"] for f in feats], dtype="Int64"
-                ),
-                "px_checksum": pd.array(
-                    [f["px_checksum"] for f in feats], dtype="Int64"
-                ),
-            }
-        )
+def decode_real_kernel(batch: pa.RecordBatch) -> list:
+    """Decode kernel: struct-parse every payload's actual bytes via
+    decode_media_real (whose feature keys are in schema order; a
+    feature a format lacks is a null)."""
+    feats = [decode_media_real(p) for p in batch.column("payload").to_pylist()]
+    return [
+        batch.column("media_id"),
+        batch.column("media_type"),
+        *zip(*(f.values() for f in feats)),
+    ]
 
 
 _DECODE_REAL_ORACLE = f"""
@@ -494,12 +458,13 @@ def multimodal_decode_bmp_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
     synthesis is deterministic in blob length), so a misparsed header
     field fails the hash gate — this is the honest version of "decode
     works", not a checksum of opaque bytes. Both kernels are
-    Arrow-batched mapInPandas; at 100 TB the encode stage is the
-    binaryFile scan and the decode stage is unchanged.
+    Arrow batch kernels; at 100 TB the encode stage is the binaryFile
+    scan and the decode stage is unchanged.
     """
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    media = docs.mapInPandas(encode_media_kernel, schema=_MEDIA_SCHEMA)
-    decoded = media.mapInPandas(decode_real_kernel, schema=_DECODE_REAL_SCHEMA)
+    media = encode_media(load_table(spark, sf_dir, "documents"))
+    decoded = map_batches(
+        media, _MEDIA_COLUMNS, _DECODE_REAL_SCHEMA, decode_real_kernel
+    )
     return (
         decoded.groupBy("media_type")
         .agg(
@@ -543,49 +508,28 @@ def decimate_wav_half(payload: bytes) -> bytes:
     return riff + fmt + datac
 
 
-_DECIMATE_WAV_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("n_samples", T.LongType()),
-        T.StructField("out_samples", T.LongType()),
-        T.StructField("out_rate", T.IntegerType()),
-        T.StructField("out_duration_ms", T.LongType()),
-        T.StructField("out_checksum", T.LongType()),
-    ]
+_DECIMATE_WAV_SCHEMA = (
+    "media_id bigint, n_samples bigint, out_samples bigint, out_rate int,"
+    " out_duration_ms bigint, out_checksum bigint"
 )
 
 
-def decimate_wav_kernel(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel: decimate each WAV payload and round-trip
-    the result through the decoder (the output must itself be a valid
-    WAV)."""
-    for pdf in batches:
-        ids, ns, outs, rates, durs, cks = [], [], [], [], [], []
-        for mid, mtype, payload in zip(
-            pdf["media_id"], pdf["media_type"], pdf["payload"]
-        ):
-            if mtype != "audio/wav":
-                continue
-            src = decode_media_real(bytes(payload))
-            out = decode_media_real(decimate_wav_half(bytes(payload)))
-            ids.append(int(mid))
-            ns.append(src["n_samples"])
-            outs.append(out["n_samples"])
-            rates.append(out["sample_rate"])
-            durs.append(out["duration_ms"])
-            cks.append(out["px_checksum"])
-        yield pd.DataFrame(
-            {
-                "media_id": pd.Series(ids, dtype="int64"),
-                "n_samples": pd.Series(ns, dtype="int64"),
-                "out_samples": pd.Series(outs, dtype="int64"),
-                "out_rate": pd.Series(rates, dtype="int32"),
-                "out_duration_ms": pd.Series(durs, dtype="int64"),
-                "out_checksum": pd.Series(cks, dtype="int64"),
-            }
-        )
+def decimate_wav_kernel(batch: pa.RecordBatch) -> list:
+    """Decimate each WAV payload and round-trip the result through the
+    decoder (the output must itself be a valid WAV)."""
+    ids, ns, outs, rates, durs, cks = [], [], [], [], [], []
+    for mid, mtype, payload in _media_rows(batch):
+        if mtype != "audio/wav":
+            continue
+        src = decode_media_real(payload)
+        out = decode_media_real(decimate_wav_half(payload))
+        ids.append(mid)
+        ns.append(src["n_samples"])
+        outs.append(out["n_samples"])
+        rates.append(out["sample_rate"])
+        durs.append(out["duration_ms"])
+        cks.append(out["px_checksum"])
+    return [ids, ns, outs, rates, durs, cks]
 
 
 _DECIMATE_WAV_ORACLE = f"""
@@ -607,9 +551,10 @@ def multimodal_decimate_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
     through the decoder, and aggregate the DECODED output properties.
     The oracle predicts sample counts and durations from strlen; a
     chunk-walk or sample-stride bug breaks the hash."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    media = docs.mapInPandas(encode_media_kernel, schema=_MEDIA_SCHEMA)
-    outs = media.mapInPandas(decimate_wav_kernel, schema=_DECIMATE_WAV_SCHEMA)
+    media = encode_media(load_table(spark, sf_dir, "documents"))
+    outs = map_batches(
+        media, _MEDIA_COLUMNS, _DECIMATE_WAV_SCHEMA, decimate_wav_kernel
+    )
     return outs.agg(
         F.count(F.lit(1)).alias("n_audio"),
         F.sum("n_samples").cast("long").alias("sum_samples"),
@@ -618,50 +563,29 @@ def multimodal_decimate_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_RESIZE_BMP_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("thumb_w", T.IntegerType()),
-        T.StructField("thumb_h", T.IntegerType()),
-        T.StructField("thumb_checksum", T.LongType()),
-    ]
+_RESIZE_BMP_SCHEMA = (
+    "media_id bigint, width int, height int, thumb_w int, thumb_h int,"
+    " thumb_checksum bigint"
 )
 
 
-def resize_bmp_kernel(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel: decode each BMP payload, 2x-downscale its
-    REAL pixels, re-encode, and re-decode the thumbnail (round-trip
-    through the codec proves the output is itself a valid BMP)."""
-    for pdf in batches:
-        ids, ws, hs, tws, ths, cks = [], [], [], [], [], []
-        for mid, mtype, payload in zip(
-            pdf["media_id"], pdf["media_type"], pdf["payload"]
-        ):
-            if mtype != "image/bmp":
-                continue
-            src = decode_media_real(bytes(payload))
-            thumb = resize_bmp_half(bytes(payload))
-            dst = decode_media_real(thumb)
-            ids.append(int(mid))
-            ws.append(src["width"])
-            hs.append(src["height"])
-            tws.append(dst["width"])
-            ths.append(dst["height"])
-            cks.append(dst["px_checksum"])
-        yield pd.DataFrame(
-            {
-                "media_id": pd.Series(ids, dtype="int64"),
-                "width": pd.Series(ws, dtype="int32"),
-                "height": pd.Series(hs, dtype="int32"),
-                "thumb_w": pd.Series(tws, dtype="int32"),
-                "thumb_h": pd.Series(ths, dtype="int32"),
-                "thumb_checksum": pd.Series(cks, dtype="int64"),
-            }
-        )
+def resize_bmp_kernel(batch: pa.RecordBatch) -> list:
+    """Decode each BMP payload, 2x-downscale its REAL pixels,
+    re-encode, and re-decode the thumbnail (round-trip through the
+    codec proves the output is itself a valid BMP)."""
+    ids, ws, hs, tws, ths, cks = [], [], [], [], [], []
+    for mid, mtype, payload in _media_rows(batch):
+        if mtype != "image/bmp":
+            continue
+        src = decode_media_real(payload)
+        dst = decode_media_real(resize_bmp_half(payload))
+        ids.append(mid)
+        ws.append(src["width"])
+        hs.append(src["height"])
+        tws.append(dst["width"])
+        ths.append(dst["height"])
+        cks.append(dst["px_checksum"])
+    return [ids, ws, hs, tws, ths, cks]
 
 
 _RESIZE_BMP_ORACLE = f"""
@@ -689,9 +613,10 @@ def multimodal_resize_bmp(spark: SparkSession, sf_dir: str) -> DataFrame:
     bug anywhere in decode -> subsample -> re-encode -> re-decode
     breaks the hash. Thumbnail pixel checksums are additionally pinned
     exactly in tests/test_multimodal.py (not SQL-expressible)."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    media = docs.mapInPandas(encode_media_kernel, schema=_MEDIA_SCHEMA)
-    thumbs = media.mapInPandas(resize_bmp_kernel, schema=_RESIZE_BMP_SCHEMA)
+    media = encode_media(load_table(spark, sf_dir, "documents"))
+    thumbs = map_batches(
+        media, _MEDIA_COLUMNS, _RESIZE_BMP_SCHEMA, resize_bmp_kernel
+    )
     return thumbs.agg(
         F.count(F.lit(1)).alias("n_images"),
         F.sum("width").cast("long").alias("sum_width"),
@@ -713,87 +638,59 @@ _FRAME_BYTES = 256  # fixed-size frame chunks within a video payload
 _FRAME_STRIDE = 4  # keep every 4th frame
 _MAX_FRAMES = 8  # per-video cap
 
-_FRAME_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("frame_idx", T.IntegerType()),
-        T.StructField("frame_n_bytes", T.IntegerType()),
-        T.StructField("frame_checksum", T.LongType()),
-    ]
+_FRAME_SCHEMA = (
+    "media_id bigint, frame_idx int, frame_n_bytes int, frame_checksum bigint"
 )
 
 
-def sample_frames_kernel(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """mapInPandas fan-out kernel: one input media row -> up to
-    _MAX_FRAMES sampled-frame rows (video payloads only). The Arrow
-    batch contract stays row-count-free: a kernel may emit more rows
-    than it receives."""
-    for pdf in batches:
-        ids: list[int] = []
-        idxs: list[int] = []
-        sizes: list[int] = []
-        sums: list[int] = []
-        for mid, mtype, payload in zip(
-            pdf["media_id"], pdf["media_type"], pdf["payload"]
-        ):
-            if mtype != "video/fake" or payload is None:
-                continue
-            n_frames = (len(payload) + _FRAME_BYTES - 1) // _FRAME_BYTES
-            for k, fi in enumerate(range(0, n_frames, _FRAME_STRIDE)):
-                if k >= _MAX_FRAMES:
-                    break
-                chunk = payload[fi * _FRAME_BYTES : (fi + 1) * _FRAME_BYTES]
-                ids.append(int(mid))
-                idxs.append(int(fi))
-                sizes.append(len(chunk))
-                sums.append(int(sum(chunk) % 2_147_483_647))
-        yield pd.DataFrame(
-            {
-                "media_id": pd.Series(ids, dtype="int64"),
-                "frame_idx": pd.Series(idxs, dtype="int32"),
-                "frame_n_bytes": pd.Series(sizes, dtype="int32"),
-                "frame_checksum": pd.Series(sums, dtype="int64"),
-            }
-        )
+def sample_frames_kernel(batch: pa.RecordBatch) -> list:
+    """Fan-out kernel: one input media row -> up to _MAX_FRAMES
+    sampled-frame rows (video payloads only). The Arrow batch contract
+    stays row-count-free: a kernel may emit more rows than it
+    receives."""
+    ids: list[int] = []
+    idxs: list[int] = []
+    sizes: list[int] = []
+    sums: list[int] = []
+    for mid, mtype, payload in _media_rows(batch):
+        if mtype != "video/fake" or payload is None:
+            continue
+        n_frames = (len(payload) + _FRAME_BYTES - 1) // _FRAME_BYTES
+        for k, fi in enumerate(range(0, n_frames, _FRAME_STRIDE)):
+            if k >= _MAX_FRAMES:
+                break
+            chunk = payload[fi * _FRAME_BYTES : (fi + 1) * _FRAME_BYTES]
+            ids.append(mid)
+            idxs.append(fi)
+            sizes.append(len(chunk))
+            sums.append(sum(chunk) % 2_147_483_647)
+    return [ids, idxs, sizes, sums]
 
 
-_RESIZE_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("orig_bytes", T.LongType()),
-        T.StructField("thumb_bytes", T.LongType()),
-        T.StructField("thumb_checksum", T.LongType()),
-    ]
+_RESIZE_SCHEMA = (
+    "media_id bigint, orig_bytes bigint, thumb_bytes bigint,"
+    " thumb_checksum bigint"
 )
 
 _RESIZE_STRIDE = 8  # keep every 8th byte — the stand-in "downscale"
 
 
-def resize_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas resize kernel for image payloads: stride
-    downsampling of the byte stream (a real pixel resize drops into
-    the same slot — identical signature, batch shape, and schema)."""
-    for pdf in batches:
-        mask = (pdf["media_type"] == "image/fake") & pdf["payload"].notna()
-        sub = pdf[mask]
-        thumbs = [bytes(p[::_RESIZE_STRIDE]) for p in sub["payload"]]
-        yield pd.DataFrame(
-            {
-                "media_id": pd.Series(sub["media_id"], dtype="int64"),
-                "orig_bytes": pd.Series(
-                    [len(p) for p in sub["payload"]], dtype="int64"
-                ).values,
-                "thumb_bytes": pd.Series(
-                    [len(t) for t in thumbs], dtype="int64"
-                ).values,
-                "thumb_checksum": pd.Series(
-                    [int(sum(t) % 2_147_483_647) for t in thumbs],
-                    dtype="int64",
-                ).values,
-            }
-        )
+def resize_kernel(batch: pa.RecordBatch) -> list:
+    """Resize kernel for image payloads: stride downsampling of the
+    byte stream (a real pixel resize drops into the same slot —
+    identical signature, batch shape, and schema)."""
+    ids, origs, thumbs = [], [], []
+    for mid, mtype, payload in _media_rows(batch):
+        if mtype == "image/fake" and payload is not None:
+            ids.append(mid)
+            origs.append(len(payload))
+            thumbs.append(payload[::_RESIZE_STRIDE])
+    return [
+        ids,
+        origs,
+        [len(t) for t in thumbs],
+        [sum(t) % 2_147_483_647 for t in thumbs],
+    ]
 
 
 # Oracle strategy (graduates the query from rows-only to
@@ -839,14 +736,16 @@ FROM per
 @register("multimodal_frame_sample", oracle=_FRAME_ORACLE)
 def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sampled-frame summary over video payloads: Arrow-batched
-    fan-out (mapInPandas emitting up to _MAX_FRAMES rows per video),
+    fan-out (a kernel emitting up to _MAX_FRAMES rows per video),
     then a JVM aggregate. Fully oracled: the synthetic payload is
     documents.text utf-8 bytes, so DuckDB recomputes every sampled
     byte range from hex(encode(text)). tests/test_multimodal.py
     additionally pins per-frame rows against a pure-Python
     recomputation."""
     media = media_frame(spark, sf_dir)
-    frames = media.mapInPandas(sample_frames_kernel, schema=_FRAME_SCHEMA)
+    frames = map_batches(
+        media, _MEDIA_COLUMNS, _FRAME_SCHEMA, sample_frames_kernel
+    )
     return frames.agg(
         F.countDistinct("media_id").alias("n_videos"),
         F.count(F.lit(1)).alias("n_frames_sampled"),
@@ -884,7 +783,7 @@ def multimodal_resize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     hex(encode(text)); exact per-row byte semantics additionally
     pinned in tests/test_multimodal.py."""
     media = media_frame(spark, sf_dir)
-    thumbs = media.mapInPandas(resize_kernel, schema=_RESIZE_SCHEMA)
+    thumbs = map_batches(media, _MEDIA_COLUMNS, _RESIZE_SCHEMA, resize_kernel)
     return thumbs.agg(
         F.count(F.lit(1)).alias("n_images"),
         F.sum("orig_bytes").cast("long").alias("total_orig_bytes"),
@@ -898,8 +797,8 @@ def multimodal_resize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # count over the DECODED PCM sample stream — the first actual DSP
 # feature in the multimodal family (decode/resize/decimate above are
 # codec plumbing). The kernel chunk-walks the RIFF container and
-# unpacks the int16 samples (stdlib struct, Arrow-batched
-# mapInPandas); energy and crossings are exact integer arithmetic
+# unpacks the int16 samples (stdlib struct, an Arrow batch kernel);
+# energy and crossings are exact integer arithmetic
 # over those samples.
 #
 # Oracle honesty: the synthesis maps each text byte b to the sample
@@ -933,39 +832,21 @@ def _wav_samples(payload: bytes) -> list[int]:
     return []
 
 
-_WAV_FEATURES_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("n_samples", T.LongType()),
-        T.StructField("energy", T.LongType()),
-        T.StructField("zcr", T.LongType()),
-    ]
+_WAV_FEATURES_SCHEMA = (
+    "media_id bigint, n_samples bigint, energy bigint, zcr bigint"
 )
 
 
-def wav_features_kernel(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """mapInPandas DSP kernel: decoded-sample energy (sum of squares)
-    and strict zero crossings (adjacent products < 0)."""
-    for pdf in batches:
-        ids, ns, es, zs = [], [], [], []
-        for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-            s = _wav_samples(bytes(payload))
-            ids.append(int(mid))
-            ns.append(len(s))
-            es.append(sum(v * v for v in s))
-            zs.append(
-                sum(1 for a, b in zip(s, s[1:]) if a * b < 0)
-            )
-        yield pd.DataFrame(
-            {
-                "media_id": pd.Series(ids, dtype="int64"),
-                "n_samples": pd.Series(ns, dtype="int64"),
-                "energy": pd.Series(es, dtype="int64"),
-                "zcr": pd.Series(zs, dtype="int64"),
-            }
-        )
+def wav_features_kernel(batch: pa.RecordBatch) -> list:
+    """DSP kernel: decoded-sample energy (sum of squares) and strict
+    zero crossings (adjacent products < 0)."""
+    ns, es, zs = [], [], []
+    for payload in batch.column("payload").to_pylist():
+        s = _wav_samples(payload)
+        ns.append(len(s))
+        es.append(sum(v * v for v in s))
+        zs.append(sum(1 for a, b in zip(s, s[1:]) if a * b < 0))
+    return [batch.column("media_id"), ns, es, zs]
 
 
 _WAV_FEATURES_ORACLE = f"""
@@ -1012,9 +893,11 @@ def multimodal_wav_energy_zcr(
         .select("doc_id", "text")
         .filter("doc_id % 3 = 1")
     )
-    media = docs.mapInPandas(encode_media_kernel, schema=_MEDIA_SCHEMA)
-    feats = media.mapInPandas(
-        wav_features_kernel, schema=_WAV_FEATURES_SCHEMA
+    feats = map_batches(
+        encode_media(docs),
+        ["media_id", "payload"],
+        _WAV_FEATURES_SCHEMA,
+        wav_features_kernel,
     )
     return feats.orderBy("media_id")
 
@@ -1047,46 +930,29 @@ def multimodal_wav_energy_zcr(
 # treatment). Output is a 1-row audit, not the pair list.
 # --------------------------------------------------------------------
 
-_DHASH_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("dhash", T.StringType()),
-    ]
-)
+_DHASH_SCHEMA = "media_id bigint, dhash string"
 
 
-def bmp_dhash_kernel(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel: decode each BMP payload's actual bytes and
-    emit the 64-char '0'/'1' dHash string (9x8 nearest-neighbor grid,
-    horizontal gradient signs, row-major gy then gx)."""
-    for pdf in batches:
-        ids, hs = [], []
-        for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-            w, h, rows = _bmp_pixels(bytes(payload))
-            bits = []
-            for gy in range(8):
-                sy = (gy * h) // 8
-                row = rows[sy]
-                vals = []
-                for gx in range(9):
-                    sx = (gx * w) // 9
-                    vals.append(
-                        row[3 * sx] + row[3 * sx + 1] + row[3 * sx + 2]
-                    )
-                bits.extend(
-                    "1" if vals[i] > vals[i + 1] else "0"
-                    for i in range(8)
-                )
-            ids.append(int(mid))
-            hs.append("".join(bits))
-        yield pd.DataFrame(
-            {
-                "media_id": pd.Series(ids, dtype="int64"),
-                "dhash": pd.Series(hs, dtype="object"),
-            }
-        )
+def bmp_dhash_kernel(batch: pa.RecordBatch) -> list:
+    """Decode each BMP payload's actual bytes and emit the 64-char
+    '0'/'1' dHash string (9x8 nearest-neighbor grid, horizontal
+    gradient signs, row-major gy then gx)."""
+    hs = []
+    for payload in batch.column("payload").to_pylist():
+        w, h, rows = _bmp_pixels(payload)
+        bits = []
+        for gy in range(8):
+            sy = (gy * h) // 8
+            row = rows[sy]
+            vals = []
+            for gx in range(9):
+                sx = (gx * w) // 9
+                vals.append(row[3 * sx] + row[3 * sx + 1] + row[3 * sx + 2])
+            bits.extend(
+                "1" if vals[i] > vals[i + 1] else "0" for i in range(8)
+            )
+        hs.append("".join(bits))
+    return [batch.column("media_id"), hs]
 
 
 _BMP_DHASH_ORACLE = f"""
@@ -1167,9 +1033,11 @@ def multimodal_bmp_dhash_neardup(
         .select("doc_id", "text")
         .filter("doc_id % 3 = 0")
     )
-    media = docs.mapInPandas(encode_media_kernel, schema=_MEDIA_SCHEMA)
-    sigs = media.mapInPandas(
-        bmp_dhash_kernel, schema=_DHASH_SCHEMA
+    sigs = map_batches(
+        encode_media(docs),
+        ["media_id", "payload"],
+        _DHASH_SCHEMA,
+        bmp_dhash_kernel,
     ).persist()
     try:
         counts = sigs.agg(
@@ -1264,66 +1132,45 @@ def multimodal_bmp_dhash_neardup(
 
 _SOBEL_EDGE_THRESH = 1020  # |Gx| + |Gy| above this = edge pixel
 
-_SOBEL_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("n_interior", T.LongType()),
-        T.StructField("grad_l1_sum", T.LongType()),
-        T.StructField("grad_l1_max", T.LongType()),
-        T.StructField("n_edge", T.LongType()),
-    ]
+_SOBEL_SCHEMA = (
+    "media_id bigint, width int, height int, n_interior bigint,"
+    " grad_l1_sum bigint, grad_l1_max bigint, n_edge bigint"
 )
 
 _SOBEL_KX = ((-1, 0, 1), (-2, 0, 2), (-1, 0, 1))
 _SOBEL_KY = ((-1, -2, -1), (0, 0, 0), (1, 2, 1))
 
 
-def bmp_sobel_kernel(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel: decode each BMP payload's actual bytes,
-    build the integer luma grid, convolve the interior with the two
-    Sobel kernels, emit per-image edge statistics."""
-    for pdf in batches:
-        recs = []
-        for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-            w, h, rows = _bmp_pixels(bytes(payload))
-            luma = [
-                [
-                    rows[r][3 * c] + rows[r][3 * c + 1] + rows[r][3 * c + 2]
-                    for c in range(w)
-                ]
-                for r in range(h)
+def bmp_sobel_kernel(batch: pa.RecordBatch) -> list:
+    """Decode each BMP payload's actual bytes, build the integer luma
+    grid, convolve the interior with the two Sobel kernels, emit
+    per-image edge statistics."""
+    recs = []
+    for payload in batch.column("payload").to_pylist():
+        w, h, rows = _bmp_pixels(payload)
+        luma = [
+            [
+                rows[r][3 * c] + rows[r][3 * c + 1] + rows[r][3 * c + 2]
+                for c in range(w)
             ]
-            n_int = s = mx = ne = 0
-            for r in range(1, h - 1):
-                for c in range(1, w - 1):
-                    gx = gy = 0
-                    for dr in (-1, 0, 1):
-                        for dc in (-1, 0, 1):
-                            v = luma[r + dr][c + dc]
-                            gx += _SOBEL_KX[dr + 1][dc + 1] * v
-                            gy += _SOBEL_KY[dr + 1][dc + 1] * v
-                    g1 = abs(gx) + abs(gy)
-                    n_int += 1
-                    s += g1
-                    mx = max(mx, g1)
-                    ne += 1 if g1 > _SOBEL_EDGE_THRESH else 0
-            recs.append((int(mid), w, h, n_int, s, mx, ne))
-        yield pd.DataFrame(
-            recs,
-            columns=[
-                "media_id",
-                "width",
-                "height",
-                "n_interior",
-                "grad_l1_sum",
-                "grad_l1_max",
-                "n_edge",
-            ],
-        )
+            for r in range(h)
+        ]
+        n_int = s = mx = ne = 0
+        for r in range(1, h - 1):
+            for c in range(1, w - 1):
+                gx = gy = 0
+                for dr in (-1, 0, 1):
+                    for dc in (-1, 0, 1):
+                        v = luma[r + dr][c + dc]
+                        gx += _SOBEL_KX[dr + 1][dc + 1] * v
+                        gy += _SOBEL_KY[dr + 1][dc + 1] * v
+                g1 = abs(gx) + abs(gy)
+                n_int += 1
+                s += g1
+                mx = max(mx, g1)
+                ne += 1 if g1 > _SOBEL_EDGE_THRESH else 0
+        recs.append((w, h, n_int, s, mx, ne))
+    return [batch.column("media_id"), *zip(*recs)]
 
 
 def _sobel_coef_values() -> str:
@@ -1409,6 +1256,10 @@ def multimodal_bmp_sobel_stats(
         .select("doc_id", "text")
         .filter("doc_id % 3 = 0")
     )
-    media = docs.mapInPandas(encode_media_kernel, schema=_MEDIA_SCHEMA)
-    feats = media.mapInPandas(bmp_sobel_kernel, schema=_SOBEL_SCHEMA)
+    feats = map_batches(
+        encode_media(docs),
+        ["media_id", "payload"],
+        _SOBEL_SCHEMA,
+        bmp_sobel_kernel,
+    )
     return feats.orderBy("media_id")

@@ -1473,7 +1473,11 @@ def _rad_signatures_arrow(emb: DataFrame) -> DataFrame:
     Map-only at any scale; only (vec_id, embedding) crosses the
     boundary."""
     import numpy as np
-    import pyarrow as pa
+
+    from workshop3_etl_spark.functions.arrow_kernel import (
+        map_batches,
+        vectors,
+    )
 
     planes = np.array(
         [
@@ -1484,69 +1488,44 @@ def _rad_signatures_arrow(emb: DataFrame) -> DataFrame:
         dtype=np.float64,
     ).T  # (dim, tables * 9)
     n_per_table = _RAD_BITS + _RAD_SUB_BITS + 1
-    arrow_schema = pa.schema(
-        [
-            pa.field("vec_id", pa.int64()),
-            pa.field("table_id", pa.int32()),
-            pa.field("b", pa.string()),
-            pa.field("s", pa.string()),
-            pa.field("proj", pa.float64()),
+
+    def _sig_batches(batch):
+        E = vectors(batch, "embedding", np.float64)
+        n, dim = E.shape
+        # sequential left fold over j, vectorized over rows/planes
+        acc = np.zeros((n, planes.shape[1]), dtype=np.float64)
+        for j in range(dim):
+            acc += E[:, j : j + 1] * planes[j]
+        # '1' iff fold >= 0 OR fold is NaN (Spark/DuckDB compare
+        # NaN as greatest; numpy NaN >= 0 is False, so OR it in)
+        ones = (acc >= 0.0) | np.isnan(acc)
+        out_b: list[str] = []
+        out_s: list[str] = []
+        out_proj: list[np.ndarray] = []
+        bits = np.where(ones, "1", "0")
+        for t in range(_RAD_TABLES):
+            base = t * n_per_table
+            bcols = bits[:, base : base + _RAD_BITS]
+            scols = bits[
+                :, base + _RAD_BITS : base + _RAD_BITS + _RAD_SUB_BITS
+            ]
+            out_b.extend("".join(r) for r in bcols)
+            out_s.extend("".join(r) for r in scols)
+            out_proj.append(acc[:, base + _RAD_BITS + _RAD_SUB_BITS])
+        vec_ids = batch.column("vec_id").to_numpy(zero_copy_only=False)
+        return [
+            np.tile(vec_ids, _RAD_TABLES),
+            np.repeat(np.arange(_RAD_TABLES), n),
+            out_b,
+            out_s,
+            np.concatenate(out_proj),
         ]
-    )
 
-    def _sig_batches(batches):
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            vec_ids = batch.column("vec_id").to_numpy(
-                zero_copy_only=False
-            )
-            col = batch.column("embedding")
-            if isinstance(col, pa.ChunkedArray):  # pragma: no cover
-                col = col.combine_chunks()
-            vals = np.asarray(col.flatten(), dtype=np.float64)
-            dim = vals.size // n
-            E = vals.reshape(n, dim)
-            # sequential left fold over j, vectorized over rows/planes
-            acc = np.zeros((n, planes.shape[1]), dtype=np.float64)
-            for j in range(dim):
-                acc += E[:, j : j + 1] * planes[j]
-            # '1' iff fold >= 0 OR fold is NaN (Spark/DuckDB compare
-            # NaN as greatest; numpy NaN >= 0 is False, so OR it in)
-            ones = (acc >= 0.0) | np.isnan(acc)
-            out_vec: list[int] = []
-            out_tab: list[int] = []
-            out_b: list[str] = []
-            out_s: list[str] = []
-            out_proj: list[float] = []
-            bits = np.where(ones, "1", "0")
-            for t in range(_RAD_TABLES):
-                base = t * n_per_table
-                bcols = bits[:, base : base + _RAD_BITS]
-                scols = bits[
-                    :, base + _RAD_BITS : base + _RAD_BITS + _RAD_SUB_BITS
-                ]
-                proj = acc[:, base + _RAD_BITS + _RAD_SUB_BITS]
-                out_vec.extend(vec_ids.tolist())
-                out_tab.extend([t] * n)
-                out_b.extend("".join(r) for r in bcols)
-                out_s.extend("".join(r) for r in scols)
-                out_proj.extend(proj.tolist())
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out_vec, pa.int64()),
-                    pa.array(out_tab, pa.int32()),
-                    pa.array(out_b, pa.string()),
-                    pa.array(out_s, pa.string()),
-                    pa.array(out_proj, pa.float64()),
-                ],
-                schema=arrow_schema,
-            )
-
-    return emb.select("vec_id", "embedding").mapInArrow(
-        _sig_batches, "vec_id bigint, table_id int, b string, s string,"
-        " proj double"
+    return map_batches(
+        emb,
+        ["vec_id", "embedding"],
+        "vec_id bigint, table_id int, b string, s string, proj double",
+        _sig_batches,
     )
 
 
@@ -1896,32 +1875,25 @@ def _semdedup_dominated_arrow(ch: DataFrame) -> DataFrame:
     IEEE semantics (see the call-site comment). Input must carry
     (cell, chunk, vec_id, ev, nrm, rnk)."""
     import numpy as np
-    import pyarrow as pa
 
-    tau = float(_SEM_TAU)
-    out_schema = pa.schema(
-        [
-            pa.field("cell", pa.int32()),
-            pa.field("vec_id", pa.int64()),
-            pa.field("n_edges", pa.int64()),
-        ]
+    from workshop3_etl_spark.functions.arrow_kernel import (
+        map_groups,
+        vectors,
     )
 
-    def _dominated(tbl: pa.Table) -> pa.Table:
+    tau = float(_SEM_TAU)
+
+    def _dominated(tbl):
         m = tbl.num_rows
         if m < 2:
-            return out_schema.empty_table()
+            return None
         rnk = tbl.column("rnk").to_numpy(zero_copy_only=False)
         order = np.argsort(rnk)
         vec_ids = tbl.column("vec_id").to_numpy(zero_copy_only=False)[
             order
         ]
         nrm = tbl.column("nrm").to_numpy(zero_copy_only=False)[order]
-        col = tbl.column("ev")
-        if isinstance(col, pa.ChunkedArray):
-            col = col.combine_chunks()
-        vals = np.asarray(col.flatten(), dtype=np.float64)
-        E = vals.reshape(m, vals.size // m)[order]
+        E = vectors(tbl, "ev", np.float64)[order]
         # sequential left fold over dims, vectorized over all pairs
         acc = np.zeros((m, m), dtype=np.float64)
         for j in range(E.shape[1]):
@@ -1932,22 +1904,16 @@ def _semdedup_dominated_arrow(ch: DataFrame) -> DataFrame:
         edges = np.triu(sim, k=1).sum(axis=0)  # a.rnk < b.rnk
         hit = edges > 0
         if not hit.any():
-            return out_schema.empty_table()
+            return None
         cell = tbl.column("cell")[0].as_py()
-        n = int(hit.sum())
-        return pa.Table.from_arrays(
-            [
-                pa.array([cell] * n, pa.int32()),
-                pa.array(vec_ids[hit], pa.int64()),
-                pa.array(edges[hit].astype(np.int64), pa.int64()),
-            ],
-            schema=out_schema,
-        )
+        return [[cell] * int(hit.sum()), vec_ids[hit], edges[hit]]
 
-    return (
-        ch.select("cell", "chunk", "vec_id", "ev", "nrm", "rnk")
-        .groupBy("cell", "chunk")
-        .applyInArrow(_dominated, "cell int, vec_id bigint, n_edges bigint")
+    return map_groups(
+        ch,
+        ["cell", "chunk"],
+        ["cell", "chunk", "vec_id", "ev", "nrm", "rnk"],
+        "cell int, vec_id bigint, n_edges bigint",
+        _dominated,
     )
 
 
@@ -2141,57 +2107,33 @@ def _corr_moment_partials_arrow(emb: DataFrame) -> DataFrame:
     the decimal sums downstream see the same integers the former
     explode -> groupBy computed."""
     import numpy as np
-    import pyarrow as pa
+
+    from workshop3_etl_spark.functions.arrow_kernel import (
+        map_batches,
+        vectors,
+    )
 
     scale = float(_CORR_SCALE)
-    arrow_schema = pa.schema(
-        [
-            pa.field("i", pa.int32()),
-            pa.field("j", pa.int32()),
-            pa.field("p", pa.int64()),
-        ]
-    )
     iu = np.triu_indices(64)
-    ii = (iu[0] + 1).astype(np.int32)
-    jj = (iu[1] + 1).astype(np.int32)
+    out_i = np.concatenate([iu[0] + 1, np.arange(1, 65), [0]])
+    out_j = np.concatenate([iu[1] + 1, np.zeros(64, dtype=np.int64), [0]])
 
-    def _moment_batches(batches):
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            col = batch.column("embedding")
-            if isinstance(col, pa.ChunkedArray):  # pragma: no cover
-                col = col.combine_chunks()
-            vals = np.asarray(col.flatten(), dtype=np.float64)
-            dim = vals.size // n
-            assert dim == 64, dim  # the (i, j) triangle is 64-wide
-            E = vals.reshape(n, dim)
-            # chunk to bound the exact-int64 pair partial (< 2^58)
-            for lo in range(0, n, 16384):
-                Q = np.floor(E[lo : lo + 16384] * scale).astype(np.int64)
-                P = Q.T @ Q  # exact int64 matmul
-                S = Q.sum(axis=0)  # exact int64
-                out_i = np.concatenate(
-                    [ii, np.arange(1, dim + 1, dtype=np.int32), [0]]
-                )
-                out_j = np.concatenate(
-                    [jj, np.zeros(dim, dtype=np.int32), [0]]
-                )
-                out_p = np.concatenate(
-                    [P[iu], S, [np.int64(Q.shape[0])]]
-                )
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(out_i, pa.int32()),
-                        pa.array(out_j, pa.int32()),
-                        pa.array(out_p, pa.int64()),
-                    ],
-                    schema=arrow_schema,
-                )
+    def _moment_batches(batch):
+        E = vectors(batch, "embedding", np.float64)
+        n, dim = E.shape
+        assert dim == 64, dim  # the (i, j) triangle is 64-wide
+        # chunk to bound the exact-int64 pair partial (< 2^58)
+        out_p = []
+        for lo in range(0, n, 16384):
+            Q = np.floor(E[lo : lo + 16384] * scale).astype(np.int64)
+            P = Q.T @ Q  # exact int64 matmul
+            S = Q.sum(axis=0)  # exact int64
+            out_p.append(np.concatenate([P[iu], S, [np.int64(Q.shape[0])]]))
+        k = len(out_p)
+        return [np.tile(out_i, k), np.tile(out_j, k), np.concatenate(out_p)]
 
-    return emb.select("embedding").mapInArrow(
-        _moment_batches, "i int, j int, p bigint"
+    return map_batches(
+        emb, ["embedding"], "i int, j int, p bigint", _moment_batches
     )
 
 

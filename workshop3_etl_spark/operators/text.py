@@ -1726,42 +1726,26 @@ def _bigram_count_partials_arrow(docs: DataFrame) -> DataFrame:
     batch-vocabulary-sized partial frame; the head's ordering and
     tie-breaks stay in Spark, so string comparison semantics are
     untouched."""
-    import pyarrow as pa
+    from collections import Counter
 
-    arrow_schema = pa.schema(
-        [
-            pa.field("w1", pa.string()),
-            pa.field("w2", pa.string()),
-            pa.field("n", pa.int64()),
+    from workshop3_etl_spark.functions.arrow_kernel import map_batches
+
+    def _bigram_batches(b):
+        counts: Counter = Counter()
+        for t in b.column("text").to_pylist():
+            toks = [x for x in t.split(" ") if x]
+            counts.update(zip(toks, toks[1:]))
+        if not counts:
+            return None
+        keys = list(counts.keys())
+        return [
+            [k[0] for k in keys],
+            [k[1] for k in keys],
+            [counts[k] for k in keys],
         ]
-    )
 
-    def _bigram_batches(batches):
-        from collections import Counter
-
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            counts: Counter = Counter()
-            for t in b.column("text").to_pylist():
-                toks = [x for x in t.split(" ") if x]
-                counts.update(zip(toks, toks[1:]))
-            if not counts:
-                continue
-            keys = list(counts.keys())
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array([k[0] for k in keys], pa.string()),
-                    pa.array([k[1] for k in keys], pa.string()),
-                    pa.array(
-                        [counts[k] for k in keys], pa.int64()
-                    ),
-                ],
-                schema=arrow_schema,
-            )
-
-    return docs.select("text").mapInArrow(
-        _bigram_batches, "w1 string, w2 string, n bigint"
+    return map_batches(
+        docs, ["text"], "w1 string, w2 string, n bigint", _bigram_batches
     )
 
 

@@ -10,6 +10,9 @@ chosen for correctness-at-scale first:
   tests; on a real cluster this is overridden (AQE coalesces down).
 - Arrow enabled so the Pandas-UDF slow path is batch-vectorized.
 - UTC session timezone so timestamp semantics match the DuckDB oracle.
+- Python workers get this package's parent directory on their
+  ``PYTHONPATH`` (Spark merges it with its own pyspark paths), so
+  kernels unpickle whatever directory the driver was started in.
 """
 
 from __future__ import annotations
@@ -18,6 +21,7 @@ import os
 
 from pyspark.sql import SparkSession
 
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
@@ -58,6 +62,7 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
         .config("spark.sql.parquet.filterPushdown", "true")
         # events.parquet carries TIMESTAMP(NANOS) which Spark rejects;
         # read as long and convert in sources.tables.load_table.
