@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
 from workshop3_etl_spark.sources.tables import load_table
-from workshop3_etl_spark.streaming.rollup import maintain_rollup, read_rollup
+from workshop3_etl_spark.streaming.rollup import ROLLUP
 
 
 def test_incremental_rollup_equals_batch(spark, tmp_path):
@@ -34,10 +34,10 @@ def test_incremental_rollup_equals_batch(spark, tmp_path):
         .parquet(src)
     )
     rollup = str(tmp_path / "rollup")
-    maintain_rollup(spark, stream, rollup, str(tmp_path / "ckpt"))
+    ROLLUP.maintain(stream, rollup, str(tmp_path / "ckpt"))
 
     got = (
-        read_rollup(spark, rollup)
+        ROLLUP.read(spark, rollup)
         .select("day", "event_type", "n_events", "value_cents")
         .orderBy("day", "event_type")
         .collect()
@@ -135,7 +135,7 @@ def test_streaming_decayed_counters_equal_batch_query(spark, tmp_path):
     ranges (so the state genuinely ages between batches)."""
     from workshop3_etl_spark.plans import registry
     from workshop3_etl_spark.streaming.rollup import (
-        maintain_decayed_counters,
+        ROLLUP,
         read_decayed_counters,
     )
 
@@ -160,7 +160,7 @@ def test_streaming_decayed_counters_equal_batch_query(spark, tmp_path):
         .parquet(src)
     )
     state = str(tmp_path / "counters")
-    maintain_decayed_counters(spark, stream, state, str(tmp_path / "ck"))
+    ROLLUP.maintain(stream, state, str(tmp_path / "ck"))
 
     got = [tuple(r) for r in read_decayed_counters(spark, state).collect()]
     exp = [
@@ -179,7 +179,7 @@ def test_decayed_counters_resume_from_checkpoint(spark, tmp_path):
     double counting) and the final state must equal the batch query."""
     from workshop3_etl_spark.plans import registry
     from workshop3_etl_spark.streaming.rollup import (
-        maintain_decayed_counters,
+        ROLLUP,
         read_decayed_counters,
     )
 
@@ -201,7 +201,7 @@ def test_decayed_counters_resume_from_checkpoint(spark, tmp_path):
 
     # run 1: only the early slice exists
     ev.filter(day <= 10).repartition(1).write.parquet(f"{src}/p1")
-    maintain_decayed_counters(spark, stream(), state, ck)
+    ROLLUP.maintain(stream(), state, ck)
     partial = {
         r["event_type"]: r["n_events"]
         for r in read_decayed_counters(spark, state).collect()
@@ -211,7 +211,7 @@ def test_decayed_counters_resume_from_checkpoint(spark, tmp_path):
         f"{src}/p2"
     )
     ev.filter(day > 20).repartition(1).write.parquet(f"{src}/p3")
-    maintain_decayed_counters(spark, stream(), state, ck)
+    ROLLUP.maintain(stream(), state, ck)
 
     got = [tuple(r) for r in read_decayed_counters(spark, state).collect()]
     exp = [
@@ -237,7 +237,7 @@ def test_decayed_counters_exact_past_horizon(spark, tmp_path):
         _DECAY_HORIZON_DAYS,
     )
     from workshop3_etl_spark.streaming.rollup import (
-        maintain_decayed_counters,
+        ROLLUP,
         read_decayed_counters,
     )
 
@@ -258,7 +258,7 @@ def test_decayed_counters_exact_past_horizon(spark, tmp_path):
         .parquet(src)
     )
     state = str(tmp_path / "counters")
-    maintain_decayed_counters(spark, stream, state, str(tmp_path / "ck"))
+    ROLLUP.maintain(stream, state, str(tmp_path / "ck"))
 
     got = {
         r["event_type"]: (r["n_events"], r["decayed_count"])
@@ -302,10 +302,8 @@ def test_compaction_preserves_rollup_and_counters(spark, tmp_path):
     import os
 
     from workshop3_etl_spark.streaming.rollup import (
-        compact_rollup,
-        maintain_rollup,
+        ROLLUP,
         read_decayed_counters,
-        read_rollup,
     )
 
     ev = load_table(spark, SF_SMOKE, "events").select(
@@ -328,9 +326,9 @@ def test_compaction_preserves_rollup_and_counters(spark, tmp_path):
             .parquet(src)
         )
 
-    maintain_rollup(spark, stream(), rollup, ck)
+    ROLLUP.maintain(stream(), rollup, ck)
     before_rollup = sorted(
-        tuple(r) for r in read_rollup(spark, rollup).collect()
+        tuple(r) for r in ROLLUP.read(spark, rollup).collect()
     )
     before_counters = sorted(
         tuple(r) for r in read_decayed_counters(spark, rollup).collect()
@@ -343,14 +341,14 @@ def test_compaction_preserves_rollup_and_counters(spark, tmp_path):
     # both batches are committed (availableNow completed) — fold them.
     # Cleanup of the folded partials is deferred to the NEXT run
     # (reader grace window), so the second compact reclaims the space.
-    compact_rollup(spark, rollup, through_epoch=10_000)
+    ROLLUP.compact(spark, rollup, through_epoch=10_000)
     epochs = sorted(n for n in os.listdir(rollup) if n.startswith("epoch="))
     assert "epoch=-2" in epochs and len(epochs) == n_epochs_before + 1
-    compact_rollup(spark, rollup, through_epoch=10_000)
+    ROLLUP.compact(spark, rollup, through_epoch=10_000)
     epochs = [n for n in os.listdir(rollup) if n.startswith("epoch=")]
     assert epochs == ["epoch=-2"]
     assert sorted(
-        tuple(r) for r in read_rollup(spark, rollup).collect()
+        tuple(r) for r in ROLLUP.read(spark, rollup).collect()
     ) == before_rollup
     assert sorted(
         tuple(r) for r in read_decayed_counters(spark, rollup).collect()
@@ -358,7 +356,7 @@ def test_compaction_preserves_rollup_and_counters(spark, tmp_path):
 
     # a post-compaction batch lands next to the base and still sums
     ev.filter(day > 20).repartition(1).write.parquet(f"{src}/p3")
-    maintain_rollup(spark, stream(), rollup, ck)
+    ROLLUP.maintain(stream(), rollup, ck)
     exp = sorted(
         tuple(r)
         for r in ev.select(
@@ -376,7 +374,7 @@ def test_compaction_preserves_rollup_and_counters(spark, tmp_path):
         .collect()
     )
     assert sorted(
-        tuple(r) for r in read_rollup(spark, rollup).collect()
+        tuple(r) for r in ROLLUP.read(spark, rollup).collect()
     ) == exp
 
 
@@ -391,12 +389,8 @@ def test_compaction_crash_windows_never_double_count(
     correctly (no permanent corruption)."""
     import shutil
 
-    from workshop3_etl_spark.streaming.rollup import (
-        _read_base_manifest,
-        compact_rollup,
-        maintain_rollup,
-        read_rollup,
-    )
+    from workshop3_etl_spark.streaming.compaction import read_base_manifest
+    from workshop3_etl_spark.streaming.rollup import ROLLUP
 
     ev = load_table(spark, SF_SMOKE, "events").select(
         "event_id", "ts", "event_type", "value"
@@ -418,20 +412,20 @@ def test_compaction_crash_windows_never_double_count(
             .parquet(src)
         )
 
-    maintain_rollup(spark, stream(), rollup, ck)
-    expected = sorted(tuple(r) for r in read_rollup(spark, rollup).collect())
+    ROLLUP.maintain(stream(), rollup, ck)
+    expected = sorted(tuple(r) for r in ROLLUP.read(spark, rollup).collect())
 
     # Crash window (b): fold commits, cleanup never runs (rmtree
     # disabled). Old base/folded epochs remain on disk alongside the
     # new generation.
     real_rmtree = shutil.rmtree
     monkeypatch.setattr(shutil, "rmtree", lambda *a, **k: None)
-    compact_rollup(spark, rollup, through_epoch=10_000)
+    ROLLUP.compact(spark, rollup, through_epoch=10_000)
     monkeypatch.setattr(shutil, "rmtree", real_rmtree)
     leftover = [n for n in os.listdir(rollup) if n.startswith("epoch=")]
     assert len(leftover) > 1, "cleanup was supposed to be suppressed"
     assert (
-        sorted(tuple(r) for r in read_rollup(spark, rollup).collect())
+        sorted(tuple(r) for r in ROLLUP.read(spark, rollup).collect())
         == expected
     ), "stale dirs after a cleanup crash must not double-count"
 
@@ -442,20 +436,20 @@ def test_compaction_crash_windows_never_double_count(
     import pytest
 
     ev.limit(500).repartition(1).write.parquet(f"{src}/p3")
-    maintain_rollup(spark, stream(), rollup, ck)
-    expected = sorted(tuple(r) for r in read_rollup(spark, rollup).collect())
-    manifest_before = _read_base_manifest(rollup)
+    ROLLUP.maintain(stream(), rollup, ck)
+    expected = sorted(tuple(r) for r in ROLLUP.read(spark, rollup).collect())
+    manifest_before = read_base_manifest(rollup)
 
     def _boom(*a, **k):
         raise RuntimeError("simulated crash at manifest commit")
 
     monkeypatch.setattr(os, "replace", _boom)
     with pytest.raises(RuntimeError, match="simulated crash"):
-        compact_rollup(spark, rollup, through_epoch=10_000)
+        ROLLUP.compact(spark, rollup, through_epoch=10_000)
     monkeypatch.undo()
-    assert _read_base_manifest(rollup) == manifest_before
+    assert read_base_manifest(rollup) == manifest_before
     assert (
-        sorted(tuple(r) for r in read_rollup(spark, rollup).collect())
+        sorted(tuple(r) for r in ROLLUP.read(spark, rollup).collect())
         == expected
     ), "an uncommitted base generation must be invisible to readers"
 
@@ -463,13 +457,13 @@ def test_compaction_crash_windows_never_double_count(
     # re-folds; one more run reclaims the generation it superseded
     # (cleanup is deferred one run for the reader grace window),
     # converging the layout to exactly one committed base.
-    compact_rollup(spark, rollup, through_epoch=10_000)
-    compact_rollup(spark, rollup, through_epoch=10_000)
-    manifest = _read_base_manifest(rollup)
+    ROLLUP.compact(spark, rollup, through_epoch=10_000)
+    ROLLUP.compact(spark, rollup, through_epoch=10_000)
+    manifest = read_base_manifest(rollup)
     dirs = sorted(n for n in os.listdir(rollup) if n.startswith("epoch="))
     assert dirs == [f"epoch={manifest['base_epoch']}"]
     assert (
-        sorted(tuple(r) for r in read_rollup(spark, rollup).collect())
+        sorted(tuple(r) for r in ROLLUP.read(spark, rollup).collect())
         == expected
     )
 
@@ -486,12 +480,8 @@ def test_first_generation_fold_crash_never_double_counts(
     clean re-run must converge."""
     import pytest
 
-    from workshop3_etl_spark.streaming.rollup import (
-        _read_base_manifest,
-        compact_rollup,
-        maintain_rollup,
-        read_rollup,
-    )
+    from workshop3_etl_spark.streaming.compaction import read_base_manifest
+    from workshop3_etl_spark.streaming.rollup import ROLLUP
 
     ev = load_table(spark, SF_SMOKE, "events").select(
         "event_id", "ts", "event_type", "value"
@@ -511,38 +501,38 @@ def test_first_generation_fold_crash_never_double_counts(
         .option("recursiveFileLookup", "true")
         .parquet(src)
     )
-    maintain_rollup(spark, stream, rollup, ck)
-    expected = sorted(tuple(r) for r in read_rollup(spark, rollup).collect())
-    assert _read_base_manifest(rollup) is None
+    ROLLUP.maintain(stream, rollup, ck)
+    expected = sorted(tuple(r) for r in ROLLUP.read(spark, rollup).collect())
+    assert read_base_manifest(rollup) is None
 
     def _boom(*a, **k):
         raise RuntimeError("simulated crash at manifest commit")
 
     monkeypatch.setattr(os, "replace", _boom)
     with pytest.raises(RuntimeError, match="simulated crash"):
-        compact_rollup(spark, rollup, through_epoch=10_000)
+        ROLLUP.compact(spark, rollup, through_epoch=10_000)
     monkeypatch.undo()
 
     # The orphan first-generation base must NOT be adopted as a legacy
     # manifest-less base — no manifest, and reads unchanged.
-    assert _read_base_manifest(rollup) is None
+    assert read_base_manifest(rollup) is None
     dirs = sorted(n for n in os.listdir(rollup) if n.startswith("epoch="))
     assert "epoch=-2" in dirs and "epoch=-1" not in dirs
     assert (
-        sorted(tuple(r) for r in read_rollup(spark, rollup).collect())
+        sorted(tuple(r) for r in ROLLUP.read(spark, rollup).collect())
         == expected
     ), "a crashed first fold must be invisible to readers"
 
     # Clean re-run: GCs the orphan, folds, commits; one more run
     # reclaims the folded partials (deferred cleanup grace window).
-    compact_rollup(spark, rollup, through_epoch=10_000)
-    compact_rollup(spark, rollup, through_epoch=10_000)
-    manifest = _read_base_manifest(rollup)
+    ROLLUP.compact(spark, rollup, through_epoch=10_000)
+    ROLLUP.compact(spark, rollup, through_epoch=10_000)
+    manifest = read_base_manifest(rollup)
     assert manifest["base_epoch"] == -2
     dirs = sorted(n for n in os.listdir(rollup) if n.startswith("epoch="))
     assert dirs == ["epoch=-2"]
     assert (
-        sorted(tuple(r) for r in read_rollup(spark, rollup).collect())
+        sorted(tuple(r) for r in ROLLUP.read(spark, rollup).collect())
         == expected
     )
 
@@ -557,10 +547,8 @@ def test_maintain_compact_maintain_replay_exact(spark, tmp_path):
     import glob
 
     from workshop3_etl_spark.streaming.rollup import (
-        compact_rollup,
-        maintain_rollup,
+        ROLLUP,
         read_decayed_counters,
-        read_rollup,
     )
 
     ev = load_table(spark, SF_SMOKE, "events").select(
@@ -582,14 +570,14 @@ def test_maintain_compact_maintain_replay_exact(spark, tmp_path):
             .parquet(src)
         )
 
-    maintain_rollup(spark, stream(), rollup, ck)
+    ROLLUP.maintain(stream(), rollup, ck)
     # fold batch 0; horizon = its committed epoch
-    compact_rollup(spark, rollup, through_epoch=0)
+    ROLLUP.compact(spark, rollup, through_epoch=0)
 
     # batch 1 lands; then its checkpoint commit is "lost" (crash after
     # the sink write, before the offset commit) -> replay
     thirds[1].repartition(1).write.parquet(f"{src}/p1")
-    maintain_rollup(spark, stream(), rollup, ck)
+    ROLLUP.maintain(stream(), rollup, ck)
     commits = sorted(glob.glob(f"{ck}/commits/[0-9]*"))
     last = commits[-1]
     os.remove(last)
@@ -600,12 +588,12 @@ def test_maintain_compact_maintain_replay_exact(spark, tmp_path):
         os.remove(crc)
     # replay: the same file re-runs as the same batch id and
     # overwrites its own epoch partition
-    maintain_rollup(spark, stream(), rollup, ck)
+    ROLLUP.maintain(stream(), rollup, ck)
 
     # third batch + second compaction generation
     thirds[2].repartition(1).write.parquet(f"{src}/p2")
-    maintain_rollup(spark, stream(), rollup, ck)
-    compact_rollup(spark, rollup, through_epoch=10_000)
+    ROLLUP.maintain(stream(), rollup, ck)
+    ROLLUP.compact(spark, rollup, through_epoch=10_000)
 
     exp_rollup = sorted(
         tuple(r)
@@ -624,15 +612,15 @@ def test_maintain_compact_maintain_replay_exact(spark, tmp_path):
         .collect()
     )
     assert (
-        sorted(tuple(r) for r in read_rollup(spark, rollup).collect())
+        sorted(tuple(r) for r in ROLLUP.read(spark, rollup).collect())
         == exp_rollup
     )
     # decayed-counter read surface rides the same state
     assert read_decayed_counters(spark, rollup).count() > 0
     # second generation: base epoch advanced past the first (-2)
-    from workshop3_etl_spark.streaming.rollup import _read_base_manifest
+    from workshop3_etl_spark.streaming.compaction import read_base_manifest
 
-    assert _read_base_manifest(rollup)["base_epoch"] == -3
+    assert read_base_manifest(rollup)["base_epoch"] == -3
 
 
 def test_legacy_manifestless_base_is_adopted_not_deleted(spark, tmp_path):
@@ -642,11 +630,8 @@ def test_legacy_manifestless_base_is_adopted_not_deleted(spark, tmp_path):
     than garbage-collect it as an orphan."""
     import os
 
-    from workshop3_etl_spark.streaming.rollup import (
-        _read_base_manifest,
-        compact_rollup,
-        read_rollup,
-    )
+    from workshop3_etl_spark.streaming.compaction import read_base_manifest
+    from workshop3_etl_spark.streaming.rollup import ROLLUP
 
     rollup = str(tmp_path / "rollup")
     base = spark.createDataFrame(
@@ -664,69 +649,55 @@ def test_legacy_manifestless_base_is_adopted_not_deleted(spark, tmp_path):
         "value_cents", F.lit(0).alias("epoch"),
     )
     base.unionByName(newer).write.partitionBy("epoch", "day").parquet(rollup)
-    assert _read_base_manifest(rollup) == {
+    assert read_base_manifest(rollup) == {
         "base_epoch": -1, "folded_through": -1,
     }
-    rows = read_rollup(spark, rollup).collect()
+    rows = ROLLUP.read(spark, rollup).collect()
     assert [(r["n_events"], r["value_cents"]) for r in rows] == [(7, 700)]
 
-    compact_rollup(spark, rollup, through_epoch=10_000)
+    ROLLUP.compact(spark, rollup, through_epoch=10_000)
     # fold adopted the legacy base into generation -2; the legacy dir
     # itself is reclaimed by the next run (deferred cleanup)
-    compact_rollup(spark, rollup, through_epoch=10_000)
+    ROLLUP.compact(spark, rollup, through_epoch=10_000)
     dirs = sorted(n for n in os.listdir(rollup) if n.startswith("epoch="))
     assert dirs == ["epoch=-2"], dirs
-    rows = read_rollup(spark, rollup).collect()
+    rows = ROLLUP.read(spark, rollup).collect()
     assert [(r["n_events"], r["value_cents"]) for r in rows] == [(7, 700)]
 
 
 def test_epoch_partition_writers_use_shared_compaction_protocol():
-    """Architecture guard (r4 verdict task): every module that writes
-    ``epoch=`` partitions must ride the shared crash-safe manifest
-    protocol in streaming/compaction.py — reading through
-    live_filter/read_base_manifest and folding through
-    compact_partials — never a private reinvention. A module that
-    partitions by epoch without importing the protocol is a bug by
-    construction."""
+    """Architecture guard (r4 verdict task): the epoch-partial layout
+    has exactly one writer, streaming/compaction.py, so every
+    maintained state rides its replay-safe write, its live read and
+    its crash-safe fold — never a private reinvention. Likewise every
+    availableNow stream in the engine runs through the one runner
+    (streaming/runner.py); the stream-scoring topology
+    (streaming/pipeline.py) alone starts its own query, which it
+    returns still running."""
     import pathlib
     import re
 
     pkg = pathlib.Path("workshop3_etl_spark")
-    writers = []
-    for py in pkg.rglob("*.py"):
-        if py.name == "compaction.py":
-            continue
-        text = py.read_text()
-        if re.search(r"partitionBy\(\s*['\"]epoch['\"]", text):
-            writers.append((py, text))
-    # the two known epoch-state producers must be found (the guard
-    # itself must not go vacuous if writes are refactored)
-    names = {p.name for p, _ in writers}
-    assert {"ingest_dedup.py", "rollup.py"} <= names, names
-    # AST-level check: a comment or docstring mentioning the module
-    # must not satisfy the guard — only a real import of it does.
-    import ast
 
-    for py, text in writers:
-        imports_protocol = False
-        for node in ast.walk(ast.parse(text)):
-            if isinstance(node, ast.ImportFrom) and (
-                node.module == "workshop3_etl_spark.streaming.compaction"
-                or (
-                    node.module == "workshop3_etl_spark.streaming"
-                    and any(a.name == "compaction" for a in node.names)
-                )
-            ):
-                imports_protocol = True
-            if isinstance(node, ast.Import) and any(
-                a.name == "workshop3_etl_spark.streaming.compaction"
-                for a in node.names
-            ):
-                imports_protocol = True
-        assert imports_protocol, (
-            f"{py} writes epoch= partitions but does not import the "
-            "shared compaction/manifest protocol"
-        )
+    def files_with(pattern: str) -> set[str]:
+        return {
+            py.relative_to(pkg).as_posix()
+            for py in pkg.rglob("*.py")
+            if re.search(pattern, py.read_text())
+        }
+
+    assert files_with(r"partitionBy\(\s*['\"]epoch['\"]") <= {
+        "streaming/compaction.py"
+    }
+    # the guard must not go vacuous: the one writer is where the
+    # epoch column is stamped
+    assert files_with(r"withColumn\(\s*['\"]epoch['\"]") == {
+        "streaming/compaction.py"
+    }
+    assert files_with(r"trigger\(\s*availableNow\s*=\s*True\s*\)") == {
+        "streaming/runner.py",
+        "streaming/pipeline.py",
+    }
 
 
 def test_partial_orphan_base_dir_is_invisible_and_collected(
@@ -740,12 +711,8 @@ def test_partial_orphan_base_dir_is_invisible_and_collected(
     import os
     import shutil
 
-    from workshop3_etl_spark.streaming.rollup import (
-        _read_base_manifest,
-        compact_rollup,
-        maintain_rollup,
-        read_rollup,
-    )
+    from workshop3_etl_spark.streaming.compaction import read_base_manifest
+    from workshop3_etl_spark.streaming.rollup import ROLLUP
 
     ev = load_table(spark, SF_SMOKE, "events").select(
         "event_id", "ts", "event_type", "value"
@@ -760,8 +727,8 @@ def test_partial_orphan_base_dir_is_invisible_and_collected(
         .option("recursiveFileLookup", "true")
         .parquet(src)
     )
-    maintain_rollup(spark, stream, rollup, ck)
-    expected = sorted(tuple(r) for r in read_rollup(spark, rollup).collect())
+    ROLLUP.maintain(stream, rollup, ck)
+    expected = sorted(tuple(r) for r in ROLLUP.read(spark, rollup).collect())
 
     # forge the partial orphan: copy HALF of epoch=0's content into an
     # uncommitted epoch=-2 generation (readable parquet, wrong totals)
@@ -776,21 +743,21 @@ def test_partial_orphan_base_dir_is_invisible_and_collected(
             shutil.copytree(
                 os.path.join(src_dir, day), os.path.join(orphan, day)
             )
-    assert _read_base_manifest(rollup) is None  # still uncommitted
+    assert read_base_manifest(rollup) is None  # still uncommitted
 
     # readers: the partial generation must not leak into results
     assert (
-        sorted(tuple(r) for r in read_rollup(spark, rollup).collect())
+        sorted(tuple(r) for r in ROLLUP.read(spark, rollup).collect())
         == expected
     ), "a partially-renamed uncommitted base must be invisible"
 
     # recovery: compaction GCs the orphan, folds, converges
-    compact_rollup(spark, rollup, through_epoch=10_000)
-    compact_rollup(spark, rollup, through_epoch=10_000)
+    ROLLUP.compact(spark, rollup, through_epoch=10_000)
+    ROLLUP.compact(spark, rollup, through_epoch=10_000)
     dirs = sorted(n for n in os.listdir(rollup) if n.startswith("epoch="))
     assert dirs == ["epoch=-2"]
     assert (
-        sorted(tuple(r) for r in read_rollup(spark, rollup).collect())
+        sorted(tuple(r) for r in ROLLUP.read(spark, rollup).collect())
         == expected
     )
 
@@ -803,13 +770,7 @@ def test_streaming_cms_merge_replay_and_compaction(spark, tmp_path):
     compaction must preserve the merged grid."""
     import os
 
-    from workshop3_etl_spark.streaming.rollup import (
-        _batch_cms_partial,
-        compact_cms,
-        maintain_cms,
-        read_cms_sketch,
-        write_cms_partial,
-    )
+    from workshop3_etl_spark.streaming.rollup import CMS, _batch_cms_partial
 
     ev = load_table(spark, SF_SMOKE, "events").select("event_id", "user_id")
     src = str(tmp_path / "src")
@@ -830,7 +791,7 @@ def test_streaming_cms_merge_replay_and_compaction(spark, tmp_path):
             .parquet(src)
         )
 
-    maintain_cms(spark, stream(), state, ck)
+    CMS.maintain(stream(), state, ck)
     n_epochs = sum(1 for n in os.listdir(state) if n.startswith("epoch="))
     assert n_epochs >= 2  # the merge below spans real partials
 
@@ -838,7 +799,7 @@ def test_streaming_cms_merge_replay_and_compaction(spark, tmp_path):
         tuple(r) for r in _batch_cms_partial(ev, "user_id").collect()
     )
     merged = sorted(
-        tuple(r) for r in read_cms_sketch(spark, state).collect()
+        tuple(r) for r in CMS.read(spark, state).collect()
     )
     assert merged == batch_grid
 
@@ -863,20 +824,20 @@ def test_streaming_cms_merge_replay_and_compaction(spark, tmp_path):
         )
         == epoch0
     )
-    write_cms_partial(batch0, 0, state, "user_id")
+    CMS.write(batch0, 0, state)
     assert (
-        sorted(tuple(r) for r in read_cms_sketch(spark, state).collect())
+        sorted(tuple(r) for r in CMS.read(spark, state).collect())
         == batch_grid
     )
 
     # compaction folds epochs without changing the merged grid
-    compact_cms(spark, state, through_epoch=10_000)
-    compact_cms(spark, state, through_epoch=10_000)  # deferred GC run
+    CMS.compact(spark, state, through_epoch=10_000)
+    CMS.compact(spark, state, through_epoch=10_000)  # deferred GC run
     assert [n for n in os.listdir(state) if n.startswith("epoch=")] == [
         "epoch=-2"
     ]
     assert (
-        sorted(tuple(r) for r in read_cms_sketch(spark, state).collect())
+        sorted(tuple(r) for r in CMS.read(spark, state).collect())
         == batch_grid
     )
 
@@ -892,12 +853,7 @@ def test_streaming_hll_merge_duplication_and_compaction(spark, tmp_path):
     import os
 
     from workshop3_etl_spark.operators.sketches import hll_register_partial
-    from workshop3_etl_spark.streaming.rollup import (
-        compact_hll,
-        maintain_hll,
-        read_hll_registers,
-        write_hll_partial,
-    )
+    from workshop3_etl_spark.streaming.rollup import HLL
 
     ev = load_table(spark, SF_SMOKE, "events").select("event_id", "user_id")
     src = str(tmp_path / "src")
@@ -918,7 +874,7 @@ def test_streaming_hll_merge_duplication_and_compaction(spark, tmp_path):
             .parquet(src)
         )
 
-    maintain_hll(spark, stream(), state, ck)
+    HLL.maintain(stream(), state, ck)
     n_epochs = sum(1 for n in os.listdir(state) if n.startswith("epoch="))
     assert n_epochs >= 2  # the merge below spans real partials
 
@@ -926,7 +882,7 @@ def test_streaming_hll_merge_duplication_and_compaction(spark, tmp_path):
         tuple(r) for r in hll_register_partial(ev, "user_id").collect()
     )
     merged = sorted(
-        tuple(r) for r in read_hll_registers(spark, state).collect()
+        tuple(r) for r in HLL.read(spark, state).collect()
     )
     assert merged == batch_regs
 
@@ -934,20 +890,20 @@ def test_streaming_hll_merge_duplication_and_compaction(spark, tmp_path):
     # epoch (not a replay of an existing one — a genuinely duplicated
     # at-least-once feed). A CMS would double every counter; the
     # register max must not move.
-    write_hll_partial(ev, 99, state, "user_id")
+    HLL.write(ev, 99, state)
     assert (
-        sorted(tuple(r) for r in read_hll_registers(spark, state).collect())
+        sorted(tuple(r) for r in HLL.read(spark, state).collect())
         == batch_regs
     )
 
     # compaction folds epochs without changing the merged registers
-    compact_hll(spark, state, through_epoch=10_000)
-    compact_hll(spark, state, through_epoch=10_000)  # deferred GC run
+    HLL.compact(spark, state, through_epoch=10_000)
+    HLL.compact(spark, state, through_epoch=10_000)  # deferred GC run
     assert [n for n in os.listdir(state) if n.startswith("epoch=")] == [
         "epoch=-2"
     ]
     assert (
-        sorted(tuple(r) for r in read_hll_registers(spark, state).collect())
+        sorted(tuple(r) for r in HLL.read(spark, state).collect())
         == batch_regs
     )
 
@@ -960,13 +916,7 @@ def test_streaming_ols_merge_replay_and_compaction(spark, tmp_path):
     merged statistics."""
     import os
 
-    from workshop3_etl_spark.streaming.rollup import (
-        _batch_ols_partial,
-        compact_ols,
-        maintain_ols,
-        read_ols_stats,
-        write_ols_partial,
-    )
+    from workshop3_etl_spark.streaming.rollup import OLS, _batch_ols_partial
 
     ev = load_table(spark, SF_SMOKE, "events").select(
         "event_id", "ts", "value"
@@ -989,12 +939,12 @@ def test_streaming_ols_merge_replay_and_compaction(spark, tmp_path):
             .parquet(src)
         )
 
-    maintain_ols(spark, stream(), state, ck)
+    OLS.maintain(stream(), state, ck)
     n_epochs = sum(1 for n in os.listdir(state) if n.startswith("epoch="))
     assert n_epochs >= 2  # the merge below spans real partials
 
     batch_stats = tuple(_batch_ols_partial(ev).collect()[0])
-    merged = tuple(read_ols_stats(spark, state).collect()[0])
+    merged = tuple(OLS.read(spark, state).collect()[0])
     assert merged == batch_stats
 
     # crash-replay: a batch rewrites its own epoch — state unchanged.
@@ -1012,16 +962,16 @@ def test_streaming_ols_merge_replay_and_compaction(spark, tmp_path):
         for h in halves.values()
         if tuple(_batch_ols_partial(h).collect()[0]) == epoch0
     )
-    write_ols_partial(batch0, 0, state)
-    assert tuple(read_ols_stats(spark, state).collect()[0]) == batch_stats
+    OLS.write(batch0, 0, state)
+    assert tuple(OLS.read(spark, state).collect()[0]) == batch_stats
 
     # compaction folds epochs without changing the merged statistics
-    compact_ols(spark, state, through_epoch=10_000)
-    compact_ols(spark, state, through_epoch=10_000)  # deferred GC run
+    OLS.compact(spark, state, through_epoch=10_000)
+    OLS.compact(spark, state, through_epoch=10_000)  # deferred GC run
     assert [n for n in os.listdir(state) if n.startswith("epoch=")] == [
         "epoch=-2"
     ]
-    assert tuple(read_ols_stats(spark, state).collect()[0]) == batch_stats
+    assert tuple(OLS.read(spark, state).collect()[0]) == batch_stats
 
 
 def test_streaming_histogram_merge_replay_and_compaction(spark, tmp_path):
@@ -1033,11 +983,8 @@ def test_streaming_histogram_merge_replay_and_compaction(spark, tmp_path):
     import os
 
     from workshop3_etl_spark.streaming.rollup import (
+        HISTOGRAM,
         _batch_hist_partial,
-        compact_histogram,
-        maintain_histogram,
-        read_histogram,
-        write_hist_partial,
     )
 
     ev = load_table(spark, SF_SMOKE, "events").select("event_id", "value")
@@ -1059,14 +1006,14 @@ def test_streaming_histogram_merge_replay_and_compaction(spark, tmp_path):
             .parquet(src)
         )
 
-    maintain_histogram(spark, stream(), state, ck)
+    HISTOGRAM.maintain(stream(), state, ck)
     n_epochs = sum(1 for n in os.listdir(state) if n.startswith("epoch="))
     assert n_epochs >= 2  # the merge below spans real partials
 
     batch_bins = sorted(
         tuple(r) for r in _batch_hist_partial(ev).collect()
     )
-    merged = sorted(tuple(r) for r in read_histogram(spark, state).collect())
+    merged = sorted(tuple(r) for r in HISTOGRAM.read(spark, state).collect())
     assert merged == batch_bins
 
     # crash-replay: batch 0 rewrites its own epoch — state unchanged.
@@ -1085,20 +1032,20 @@ def test_streaming_histogram_merge_replay_and_compaction(spark, tmp_path):
         if sorted(tuple(r) for r in _batch_hist_partial(h).collect())
         == epoch0
     )
-    write_hist_partial(batch0, 0, state)
+    HISTOGRAM.write(batch0, 0, state)
     assert (
-        sorted(tuple(r) for r in read_histogram(spark, state).collect())
+        sorted(tuple(r) for r in HISTOGRAM.read(spark, state).collect())
         == batch_bins
     )
 
     # compaction folds epochs without changing the merged frame
-    compact_histogram(spark, state, through_epoch=10_000)
-    compact_histogram(spark, state, through_epoch=10_000)  # deferred GC
+    HISTOGRAM.compact(spark, state, through_epoch=10_000)
+    HISTOGRAM.compact(spark, state, through_epoch=10_000)  # deferred GC
     assert [n for n in os.listdir(state) if n.startswith("epoch=")] == [
         "epoch=-2"
     ]
     assert (
-        sorted(tuple(r) for r in read_histogram(spark, state).collect())
+        sorted(tuple(r) for r in HISTOGRAM.read(spark, state).collect())
         == batch_bins
     )
 
@@ -1111,18 +1058,17 @@ def test_quantizer_sums_merge_is_batch_split_invariant(spark, tmp_path):
     split)."""
     from tests.conftest import SF_SMOKE
     from workshop3_etl_spark.streaming.rollup import (
+        QUANTIZER,
         _batch_quantizer_partial,
-        read_quantizer_sums,
-        write_quantizer_partial,
     )
 
     emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
     state = str(tmp_path / "quant")
-    write_quantizer_partial(emb.where("vec_id % 2 = 0"), 0, state)
-    write_quantizer_partial(emb.where("vec_id % 2 = 1"), 1, state)
+    QUANTIZER.write(emb.where("vec_id % 2 = 0"), 0, state)
+    QUANTIZER.write(emb.where("vec_id % 2 = 1"), 1, state)
     merged = {
         (r["cell"], r["dim"]): (r["sg"], r["n"])
-        for r in read_quantizer_sums(spark, state).collect()
+        for r in QUANTIZER.read(spark, state).collect()
     }
     oneshot = {
         (r["cell"], r["dim"]): (r["sg"], r["n"])
@@ -1130,10 +1076,10 @@ def test_quantizer_sums_merge_is_batch_split_invariant(spark, tmp_path):
     }
     assert merged == oneshot
     # replay idempotence: rewriting epoch 1 must not double-count
-    write_quantizer_partial(emb.where("vec_id % 2 = 1"), 1, state)
+    QUANTIZER.write(emb.where("vec_id % 2 = 1"), 1, state)
     merged2 = {
         (r["cell"], r["dim"]): (r["sg"], r["n"])
-        for r in read_quantizer_sums(spark, state).collect()
+        for r in QUANTIZER.read(spark, state).collect()
     }
     assert merged2 == oneshot
 
@@ -1146,18 +1092,17 @@ def test_lm_counts_merge_is_batch_split_invariant(spark, tmp_path):
     the batch training pass under ANY micro-batch split."""
     from tests.conftest import SF_SMOKE
     from workshop3_etl_spark.streaming.rollup import (
+        BIGRAM_LM,
         _batch_lm_partial,
-        read_lm_counts,
-        write_lm_partial,
     )
 
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
     state = str(tmp_path / "lm")
-    write_lm_partial(docs.where("doc_id % 2 = 0"), 0, state)
-    write_lm_partial(docs.where("doc_id % 2 = 1"), 1, state)
+    BIGRAM_LM.write(docs.where("doc_id % 2 = 0"), 0, state)
+    BIGRAM_LM.write(docs.where("doc_id % 2 = 1"), 1, state)
     merged = {
         (r["lang"], r["w1"], r["w2"]): r["c2"]
-        for r in read_lm_counts(spark, state).collect()
+        for r in BIGRAM_LM.read(spark, state).collect()
     }
     oneshot = {
         (r["lang"], r["w1"], r["w2"]): r["c2"]
@@ -1165,10 +1110,10 @@ def test_lm_counts_merge_is_batch_split_invariant(spark, tmp_path):
     }
     assert merged == oneshot
     # replay idempotence: rewriting epoch 1 must not double-count
-    write_lm_partial(docs.where("doc_id % 2 = 1"), 1, state)
+    BIGRAM_LM.write(docs.where("doc_id % 2 = 1"), 1, state)
     merged2 = {
         (r["lang"], r["w1"], r["w2"]): r["c2"]
-        for r in read_lm_counts(spark, state).collect()
+        for r in BIGRAM_LM.read(spark, state).collect()
     }
     assert merged2 == oneshot
 
@@ -1179,19 +1124,15 @@ def test_bm25_index_merge_is_batch_split_invariant(spark, tmp_path):
     in exactly one batch, so df/cf/corpus counts sum correctly), and
     replaying an epoch must not double-count."""
     from tests.conftest import SF_SMOKE
-    from workshop3_etl_spark.streaming.rollup import (
-        _batch_bm25_partial,
-        read_bm25_index,
-        write_bm25_partial,
-    )
+    from workshop3_etl_spark.streaming.rollup import BM25, _batch_bm25_partial
 
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
     state = str(tmp_path / "bm25")
-    write_bm25_partial(docs.where("doc_id % 2 = 0"), 0, state)
-    write_bm25_partial(docs.where("doc_id % 2 = 1"), 1, state)
+    BM25.write(docs.where("doc_id % 2 = 0"), 0, state)
+    BM25.write(docs.where("doc_id % 2 = 1"), 1, state)
     merged = {
         r["term"]: (r["df"], r["cf"])
-        for r in read_bm25_index(spark, state).collect()
+        for r in BM25.read(spark, state).collect()
     }
     oneshot = {
         r["term"]: (r["df"], r["cf"])
@@ -1200,10 +1141,10 @@ def test_bm25_index_merge_is_batch_split_invariant(spark, tmp_path):
     assert merged == oneshot
     assert None in merged  # the corpus-stats row
     assert merged[None] == (docs.count(), oneshot[None][1])
-    write_bm25_partial(docs.where("doc_id % 2 = 1"), 1, state)
+    BM25.write(docs.where("doc_id % 2 = 1"), 1, state)
     merged2 = {
         r["term"]: (r["df"], r["cf"])
-        for r in read_bm25_index(spark, state).collect()
+        for r in BM25.read(spark, state).collect()
     }
     assert merged2 == oneshot
 
@@ -1216,18 +1157,17 @@ def test_moment_state_merge_is_batch_split_invariant(spark, tmp_path):
     computes in batch."""
     from tests.conftest import SF_SMOKE
     from workshop3_etl_spark.streaming.rollup import (
+        MOMENTS,
         _batch_moment_partial,
-        read_moments,
-        write_moment_partial,
     )
 
     emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
     state = str(tmp_path / "mom")
-    write_moment_partial(emb.where("vec_id % 2 = 0"), 0, state)
-    write_moment_partial(emb.where("vec_id % 2 = 1"), 1, state)
+    MOMENTS.write(emb.where("vec_id % 2 = 0"), 0, state)
+    MOMENTS.write(emb.where("vec_id % 2 = 1"), 1, state)
     merged = {
         (r["da"], r["db"]): r["v"]
-        for r in read_moments(spark, state).collect()
+        for r in MOMENTS.read(spark, state).collect()
     }
     oneshot = {
         (r["da"], r["db"]): r["v"]
@@ -1236,10 +1176,10 @@ def test_moment_state_merge_is_batch_split_invariant(spark, tmp_path):
     assert merged == oneshot
     assert merged[(0, 0)] == emb.count()
     # replay idempotence
-    write_moment_partial(emb.where("vec_id % 2 = 1"), 1, state)
+    MOMENTS.write(emb.where("vec_id % 2 = 1"), 1, state)
     merged2 = {
         (r["da"], r["db"]): r["v"]
-        for r in read_moments(spark, state).collect()
+        for r in MOMENTS.read(spark, state).collect()
     }
     assert merged2 == oneshot
 
@@ -1253,15 +1193,15 @@ def test_novelty_state_merge_is_batch_split_invariant(spark, tmp_path):
     shards) still attributes every gram to its smallest shard."""
     from tests.conftest import SF_SMOKE
     from workshop3_etl_spark.streaming.rollup import (
+        NOVELTY,
         _batch_novelty_partial,
         read_novelty_state,
-        write_novelty_partial,
     )
 
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
     state = str(tmp_path / "nov")
-    write_novelty_partial(docs.where("doc_id % 2 = 0"), 0, state)
-    write_novelty_partial(docs.where("doc_id % 2 = 1"), 1, state)
+    NOVELTY.write(docs.where("doc_id % 2 = 0"), 0, state)
+    NOVELTY.write(docs.where("doc_id % 2 = 1"), 1, state)
     firsts, per_shard = read_novelty_state(spark, state)
     merged_f = {r["g"]: r["first_shard"] for r in firsts.collect()}
     merged_s = {
@@ -1280,7 +1220,7 @@ def test_novelty_state_merge_is_batch_split_invariant(spark, tmp_path):
     assert merged_s == one_s
     # replay idempotence (MIN rows truly idempotent, SUM rows via the
     # epoch-partition overwrite)
-    write_novelty_partial(docs.where("doc_id % 2 = 1"), 1, state)
+    NOVELTY.write(docs.where("doc_id % 2 = 1"), 1, state)
     firsts2, per_shard2 = read_novelty_state(spark, state)
     assert {r["g"]: r["first_shard"] for r in firsts2.collect()} == one_f
     assert {

@@ -401,26 +401,18 @@ def test_stump_histogram_state_equals_batch(spark, tmp_path):
     sums are associative under any micro-batch split)."""
     from workshop3_etl_spark.ml import _STUMP_BIN_W, _STUMP_CENTS
     from workshop3_etl_spark.sources.tables import load_table, table_stream
-    from workshop3_etl_spark.streaming.batch_equivalent import (
-        _few_state_partitions,
-    )
-    from workshop3_etl_spark.streaming.rollup import (
-        maintain_stump_hist,
-        read_stump_hist,
-    )
+    from workshop3_etl_spark.streaming.rollup import STUMP
     from tests.conftest import SF_SMOKE
 
     state = str(tmp_path / "stump_hist")
-    with _few_state_partitions(spark):
-        maintain_stump_hist(
-            spark,
-            table_stream(spark, SF_SMOKE, "lineitem"),
-            state,
-            str(tmp_path / "ck"),
-        )
+    STUMP.maintain(
+        table_stream(spark, SF_SMOKE, "lineitem"),
+        state,
+        str(tmp_path / "ck"),
+    )
     got = {
         r["bin_id"]: (r["n"], r["sy"])
-        for r in read_stump_hist(spark, state).collect()
+        for r in STUMP.read(spark, state).collect()
     }
     batch = {
         r["bin_id"]: (r["n"], r["sy"])

@@ -5,8 +5,8 @@ each streaming operator's delta above it, in ONE session.
 Floor A = rate-source trivial count (engine startup + one micro-batch
 + checkpoint/state commits, no real input).
 Floor B = events file-source trivial count (adds the real input scan
-+ file-source listing, still a trivial aggregate, same
-_few_state_partitions posture as the operators).
++ file-source listing, still a trivial aggregate, run through the
+same streaming/runner.memory_sink as the operators).
 
 Each is timed with the bench protocol (1 warmup + median of N); every
 stream_* headline operator is timed the same way right after, so
@@ -26,54 +26,34 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 N = int(os.environ.get("FLOOR_SAMPLES", "5"))
 
-_seq = [0]
-
 
 def floor_rate(spark, sf_dir):
-    from workshop3_etl_spark.streaming.batch_equivalent import (
-        _few_state_partitions,
-    )
+    from workshop3_etl_spark.streaming.runner import memory_sink
 
-    _seq[0] += 1
-    sink = f"floor_rate_{_seq[0]}"
-    with tempfile.TemporaryDirectory() as ckpt:
-        with _few_state_partitions(spark):
-            (
-                spark.readStream.format("rate")
-                .option("rowsPerSecond", "1").load()
-                .groupBy().count()
-                .writeStream.format("memory").queryName(sink)
-                .outputMode("complete")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start().awaitTermination()
-            )
-        return spark.table(sink).localCheckpoint(eager=True)
+    agg = (
+        spark.readStream.format("rate")
+        .option("rowsPerSecond", "1").load()
+        .groupBy().count()
+    )
+    with tempfile.TemporaryDirectory() as ckpt, memory_sink(
+        agg, "floor_rate", "complete", ckpt
+    ) as (rows, _):
+        return rows.localCheckpoint(eager=True)
 
 
 def floor_events(spark, sf_dir):
     from pyspark.sql import functions as F
 
-    from workshop3_etl_spark.streaming.batch_equivalent import (
-        _events_stream,
-        _few_state_partitions,
-    )
+    from workshop3_etl_spark.streaming.batch_equivalent import _events_stream
+    from workshop3_etl_spark.streaming.runner import memory_sink
 
-    _seq[0] += 1
-    sink = f"floor_events_{_seq[0]}"
     agg = _events_stream(spark, sf_dir).groupBy().agg(
         F.count(F.lit(1)).alias("n")
     )
-    with tempfile.TemporaryDirectory() as ckpt:
-        with _few_state_partitions(spark):
-            (
-                agg.writeStream.format("memory").queryName(sink)
-                .outputMode("complete")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start().awaitTermination()
-            )
-        return spark.table(sink).localCheckpoint(eager=True)
+    with tempfile.TemporaryDirectory() as ckpt, memory_sink(
+        agg, "floor_events", "complete", ckpt
+    ) as (rows, _):
+        return rows.localCheckpoint(eager=True)
 
 
 def main() -> int:

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from workshop3_etl_spark.plans.registry import register
 from workshop3_etl_spark.sources.tables import normalize_event_ts, table_stream
+from workshop3_etl_spark.streaming.runner import memory_sink
 
 ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
@@ -63,20 +64,6 @@ def state_store_provider(spark: SparkSession, provider_class: str):
             spark.conf.set(key, old)
 
 
-@contextmanager
-def _few_state_partitions(spark: SparkSession, n: int = 8):
-    """Streaming state-store instances scale with shuffle partitions;
-    for these bounded demo streams 32 stores are pure overhead (each
-    is opened/committed per micro-batch). A real deployment sizes this
-    to key cardinality x executor count."""
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-
-
 _TUMBLING_ORACLE = """
 SELECT
   date_trunc('hour', ts) AS window_start,
@@ -105,7 +92,6 @@ def stream_tumbling_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame
     result equals the batch GROUP BY date_trunc('hour') — which is
     exactly what the oracle asserts.
     """
-    sink = f"stream_tumbling_{abs(hash(sf_dir)) % 10_000_000}"
     agg = (
         _events_stream(spark, sf_dir)
         .withWatermark("ts", "1 hour")
@@ -122,19 +108,11 @@ def stream_tumbling_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame
             "total_value",
         )
     )
-    with tempfile.TemporaryDirectory() as ckpt:
-        with _few_state_partitions(spark):
-            (
-                agg.writeStream.format("memory")
-                .queryName(sink)
-                .outputMode("complete")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-                .awaitTermination()
-            )
+    with tempfile.TemporaryDirectory() as ckpt, memory_sink(
+        agg, "stream_tumbling", "complete", ckpt
+    ) as (rows, _):
         return (
-            spark.table(sink)
+            rows
             .orderBy("window_start", "event_type")
             # materialize before the checkpoint dir vanishes
             .localCheckpoint(eager=True)
@@ -163,7 +141,6 @@ def stream_stateful_user_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     (SURVEY A12); unlike the reference's process-local dict, state
     here is checkpointed and sharded across executors.
     """
-    sink = f"stream_stateful_{abs(hash(sf_dir)) % 10_000_000}"
     agg = (
         _events_stream(spark, sf_dir)
         .groupBy("user_id")
@@ -177,18 +154,10 @@ def stream_stateful_user_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("mean_value"),
         )
     )
-    with tempfile.TemporaryDirectory() as ckpt:
-        with _few_state_partitions(spark):
-            (
-                agg.writeStream.format("memory")
-                .queryName(sink)
-                .outputMode("complete")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-                .awaitTermination()
-            )
-        return spark.table(sink).orderBy("user_id").localCheckpoint(eager=True)
+    with tempfile.TemporaryDirectory() as ckpt, memory_sink(
+        agg, "stream_stateful", "complete", ckpt
+    ) as (rows, _):
+        return rows.orderBy("user_id").localCheckpoint(eager=True)
 
 
 _STREAM_JOIN_ORACLE = """
@@ -248,20 +217,11 @@ def stream_stream_join_view_purchase(spark: SparkSession, sf_dir: str) -> DataFr
         "inner",
     ).select(F.col("v_user").alias("user_id"))
 
-    sink = f"stream_join_{abs(hash(sf_dir)) % 10_000_000}"
-    with tempfile.TemporaryDirectory() as ckpt:
-        with _few_state_partitions(spark):
-            (
-                joined.writeStream.format("memory")
-                .queryName(sink)
-                .outputMode("append")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-                .awaitTermination()
-            )
+    with tempfile.TemporaryDirectory() as ckpt, memory_sink(
+        joined, "stream_join", "append", ckpt
+    ) as (rows, _):
         return (
-            spark.table(sink)
+            rows
             .groupBy("user_id")
             .agg(F.count(F.lit(1)).alias("n_view_purchase_pairs"))
             .orderBy("user_id")
@@ -309,7 +269,6 @@ def stream_session_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     the watermark closes sessions whose gap has provably expired —
     bounded state without a TTL hack.
     """
-    sink = f"stream_session_{abs(hash(sf_dir)) % 10_000_000}"
     agg = (
         _events_stream(spark, sf_dir)
         .withWatermark("ts", "1 hour")
@@ -324,19 +283,11 @@ def stream_session_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    with tempfile.TemporaryDirectory() as ckpt:
-        with _few_state_partitions(spark):
-            (
-                agg.writeStream.format("memory")
-                .queryName(sink)
-                .outputMode("complete")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-                .awaitTermination()
-            )
+    with tempfile.TemporaryDirectory() as ckpt, memory_sink(
+        agg, "stream_session", "complete", ckpt
+    ) as (rows, _):
         return (
-            spark.table(sink)
+            rows
             .orderBy("user_id", "session_start")
             .localCheckpoint(eager=True)
         )
@@ -373,20 +324,11 @@ def stream_dedup_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("lang", "source")
         .dropDuplicates(["lang", "source"])
     )
-    sink = f"stream_dedup_{abs(hash(sf_dir)) % 10_000_000}"
-    with tempfile.TemporaryDirectory() as ckpt:
-        with _few_state_partitions(spark):
-            (
-                stream.writeStream.format("memory")
-                .queryName(sink)
-                .outputMode("append")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-                .awaitTermination()
-            )
+    with tempfile.TemporaryDirectory() as ckpt, memory_sink(
+        stream, "stream_dedup", "append", ckpt
+    ) as (rows, _):
         return (
-            spark.table(sink)
+            rows
             .groupBy("lang")
             .agg(F.count(F.lit(1)).cast("long").alias("n_sources"))
             .orderBy("lang")
@@ -434,7 +376,6 @@ def stream_sliding_hourly_30m_counts(spark: SparkSession, sf_dir: str) -> DataFr
     it), so the equality proven is stream(finite) == batch == explicit
     window algebra — all three agree bit-identically.
     """
-    sink = f"stream_sliding_{abs(hash(sf_dir)) % 10_000_000}"
     agg = (
         _events_stream(spark, sf_dir)
         .withWatermark("ts", "1 hour")
@@ -454,19 +395,11 @@ def stream_sliding_hourly_30m_counts(spark: SparkSession, sf_dir: str) -> DataFr
             "total_value",
         )
     )
-    with tempfile.TemporaryDirectory() as ckpt:
-        with _few_state_partitions(spark):
-            (
-                agg.writeStream.format("memory")
-                .queryName(sink)
-                .outputMode("complete")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-                .awaitTermination()
-            )
+    with tempfile.TemporaryDirectory() as ckpt, memory_sink(
+        agg, "stream_sliding", "complete", ckpt
+    ) as (rows, _):
         return (
-            spark.table(sink)
+            rows
             .orderBy("window_start", "event_type")
             .localCheckpoint(eager=True)
         )
@@ -507,7 +440,6 @@ def stream_append_closed_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic. State for emitted windows is evicted, which is why
     append + watermark is the unbounded-runtime configuration.
     """
-    sink = f"stream_append_{abs(hash(sf_dir)) % 10_000_000}"
     agg = (
         _events_stream(spark, sf_dir)
         .withWatermark("ts", "1 hour")
@@ -524,19 +456,11 @@ def stream_append_closed_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value",
         )
     )
-    with tempfile.TemporaryDirectory() as ckpt:
-        with _few_state_partitions(spark):
-            (
-                agg.writeStream.format("memory")
-                .queryName(sink)
-                .outputMode("append")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-                .awaitTermination()
-            )
+    with tempfile.TemporaryDirectory() as ckpt, memory_sink(
+        agg, "stream_append", "append", ckpt
+    ) as (rows, _):
         return (
-            spark.table(sink)
+            rows
             .orderBy("window_start", "event_type")
             .localCheckpoint(eager=True)
         )
@@ -544,12 +468,13 @@ def stream_append_closed_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------
 # foreachBatch decayed counters, run as a REAL streaming job and
-# hash-compared against the closed-form batch SQL. The incremental
-# shift-and-add arithmetic is integer-exact (streaming/rollup.py), so
-# the streaming state equals the batch query bit-for-bit — a stronger
-# claim than "approximately converges", and the multi-micro-batch
-# aging path is separately pinned by
-# tests/test_incremental_rollup.py.
+# hash-compared against the closed-form batch SQL. The state is the
+# rollup's day-granular integer counts (streaming/rollup.py); the
+# decay is applied at read time with the batch query's own per-day
+# dyadic weights, so the streaming answer equals the batch query
+# bit-for-bit at any state age — a stronger claim than
+# "approximately converges". The multi-micro-batch aging path is
+# separately pinned by tests/test_incremental_rollup.py.
 # --------------------------------------------------------------------
 
 
@@ -558,24 +483,21 @@ from workshop3_etl_spark.operators.timeseries import _POP_ORACLE
 
 @register("stream_decayed_counters", oracle=_POP_ORACLE)
 def stream_decayed_counters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Decayed per-event-type popularity counters maintained by the
-    foreachBatch job (streaming/rollup.maintain_decayed_counters),
-    surfaced through its state table.
+    """Decayed per-event-type popularity counters read from the
+    day-granular state the rollup's foreachBatch job maintains
+    (streaming/rollup.ROLLUP, decayed by read_decayed_counters).
 
     Same oracle as ts_decayed_popularity: the streaming maintenance
     must land on the batch answer exactly.
     """
     from workshop3_etl_spark.streaming.rollup import (
-        maintain_decayed_counters,
+        ROLLUP,
         read_decayed_counters,
     )
 
     with tempfile.TemporaryDirectory() as workdir:
         state = f"{workdir}/counters"
-        with _few_state_partitions(spark):
-            maintain_decayed_counters(
-                spark, _events_stream(spark, sf_dir), state, f"{workdir}/ck"
-            )
+        ROLLUP.maintain(_events_stream(spark, sf_dir), state, f"{workdir}/ck")
         # materialize before the state dir vanishes
         return read_decayed_counters(spark, state).localCheckpoint(
             eager=True
@@ -633,14 +555,13 @@ def stream_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = table_stream(spark, sf_dir, "documents")
     n_seen = load_table(spark, sf_dir, "documents").count()
     with tempfile.TemporaryDirectory() as workdir:
-        with _few_state_partitions(spark):
-            maintain_ingest_dedup(
-                spark,
-                stream,
-                f"{workdir}/index",
-                f"{workdir}/audit",
-                f"{workdir}/ck",
-            )
+        maintain_ingest_dedup(
+            spark,
+            stream,
+            f"{workdir}/index",
+            f"{workdir}/audit",
+            f"{workdir}/ck",
+        )
         n_admitted = read_admitted_ids(spark, f"{workdir}/index").count()
         n_pairs = read_audit_pairs(spark, f"{workdir}/audit").count()
     return spark.createDataFrame(
@@ -683,7 +604,6 @@ def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
     key is evicted mid-stream and the key set equals batch
     COUNT(DISTINCT user_id) per event_type — what the oracle asserts.
     """
-    sink = f"stream_dedup_ww_{abs(hash(sf_dir)) % 10_000_000}"
     deduped = (
         _events_stream(spark, sf_dir)
         .select("ts", "user_id", "event_type")
@@ -695,19 +615,11 @@ def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
         .withWatermark("ts", "31 days")
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
     )
-    with tempfile.TemporaryDirectory() as ckpt:
-        with _few_state_partitions(spark):
-            (
-                deduped.writeStream.format("memory")
-                .queryName(sink)
-                .outputMode("append")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-                .awaitTermination()
-            )
+    with tempfile.TemporaryDirectory() as ckpt, memory_sink(
+        deduped, "stream_dedup_ww", "append", ckpt
+    ) as (rows, _):
         return (
-            spark.table(sink)
+            rows
             .groupBy("event_type")
             .agg(F.count(F.lit(1)).cast("long").alias("n_distinct_users"))
             .orderBy("event_type")
@@ -717,7 +629,7 @@ def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
 
 # --------------------------------------------------------------------
 # Incrementally-maintained count-min sketch (streaming/rollup.py
-# maintain_cms) probed for heavy-hitter users and hash-compared
+# CMS) probed for heavy-hitter users and hash-compared
 # against the batch-built sketch: CMS partials merge by elementwise
 # sum, so the streaming state must equal the batch grid EXACTLY for
 # any micro-batch split — an integer-additive claim, not an
@@ -774,7 +686,7 @@ ORDER BY exact_cnt DESC, user_id
 @register("stream_cms_heavy_hitters", oracle=_stream_cms_oracle())
 def stream_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heavy-hitter users probed from the CMS state maintained by the
-    foreachBatch job (streaming/rollup.maintain_cms), verified against
+    foreachBatch job (streaming/rollup.CMS), verified against
     exact ride-along counts. The multi-epoch merge, replay, and
     compaction story is pinned by tests/test_incremental_rollup.py;
     this query proves the composed job lands on the batch-built
@@ -784,18 +696,12 @@ def stream_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         cms_bucket_sql,
     )
     from workshop3_etl_spark.sources.tables import load_table
-    from workshop3_etl_spark.streaming.rollup import (
-        maintain_cms,
-        read_cms_sketch,
-    )
+    from workshop3_etl_spark.streaming.rollup import CMS
 
     with tempfile.TemporaryDirectory() as workdir:
         state = f"{workdir}/cms"
-        with _few_state_partitions(spark):
-            maintain_cms(
-                spark, _events_stream(spark, sf_dir), state, f"{workdir}/ck"
-            )
-        sketch = read_cms_sketch(spark, state)
+        CMS.maintain(_events_stream(spark, sf_dir), state, f"{workdir}/ck")
+        sketch = CMS.read(spark, state)
         stack_args = ", ".join(
             f"{i}, {cms_bucket_sql('user_id', i)}" for i in range(CMS_D)
         )
@@ -831,7 +737,7 @@ def stream_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------
 # Incrementally-maintained HyperLogLog (streaming/rollup.py
-# maintain_hll) summarized as the one-row register report and
+# HLL) summarized as the one-row register report and
 # hash-compared against the batch-built registers. The merge identity
 # here is per-bucket MAX — associative like the CMS sum but also
 # IDEMPOTENT, so the streaming state equals the batch registers for
@@ -850,7 +756,7 @@ def _stream_hll_oracle() -> str:
 @register("stream_hll_distinct_users", oracle=_stream_hll_oracle())
 def stream_hll_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct-user HLL summary probed from the register state
-    maintained by the foreachBatch job (streaming/rollup.maintain_hll),
+    maintained by the foreachBatch job (streaming/rollup.HLL),
     next to the exact count: the streaming counterpart of
     sketch_hll_registers_custkeys, sharing its register arithmetic
     (operators/sketches.hll_register_partial) and oracle verbatim.
@@ -864,18 +770,12 @@ def stream_hll_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     256 integers per partition)."""
     from workshop3_etl_spark.operators.sketches import hll_summary
     from workshop3_etl_spark.sources.tables import load_table
-    from workshop3_etl_spark.streaming.rollup import (
-        maintain_hll,
-        read_hll_registers,
-    )
+    from workshop3_etl_spark.streaming.rollup import HLL
 
     with tempfile.TemporaryDirectory() as workdir:
         state = f"{workdir}/hll"
-        with _few_state_partitions(spark):
-            maintain_hll(
-                spark, _events_stream(spark, sf_dir), state, f"{workdir}/ck"
-            )
-        regs = read_hll_registers(spark, state)
+        HLL.maintain(_events_stream(spark, sf_dir), state, f"{workdir}/ck")
+        regs = HLL.read(spark, state)
         ex = load_table(spark, sf_dir, "events").agg(
             F.countDistinct("user_id").cast("long").alias("exact_distinct")
         )
@@ -884,7 +784,7 @@ def stream_hll_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------
-# Incrementally-trained OLS (streaming/rollup.py maintain_ols): the
+# Incrementally-trained OLS (streaming/rollup.py OLS): the
 # model's 6-integer sufficient statistic maintained per micro-batch
 # and solved in closed form from the merged sums — "retrain after new
 # data" without rescanning the stream. The integer sums are the
@@ -932,7 +832,7 @@ FROM s
 def stream_ols_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hourly value-trend OLS (value cents ~ hour index) solved from
     the sufficient statistics maintained by the foreachBatch job
-    (streaming/rollup.maintain_ols), verified against the batch
+    (streaming/rollup.OLS), verified against the batch
     closed form: the streaming-model-training shape — each new
     micro-batch adds one 6-integer partial row, and refreshing the
     model is a sum over O(#epochs) rows plus literal arithmetic,
@@ -940,18 +840,12 @@ def stream_ols_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     and compaction story is pinned by tests/test_incremental_rollup;
     this query proves the composed job lands on the batch statistics
     inside the driver's gate."""
-    from workshop3_etl_spark.streaming.rollup import (
-        maintain_ols,
-        read_ols_stats,
-    )
+    from workshop3_etl_spark.streaming.rollup import OLS
 
     with tempfile.TemporaryDirectory() as workdir:
         state = f"{workdir}/ols"
-        with _few_state_partitions(spark):
-            maintain_ols(
-                spark, _events_stream(spark, sf_dir), state, f"{workdir}/ck"
-            )
-        s = read_ols_stats(spark, state)
+        OLS.maintain(_events_stream(spark, sf_dir), state, f"{workdir}/ck")
+        s = OLS.read(spark, state)
         nd = F.col("n").cast("double")
         sxd, syd = F.col("sx").cast("double"), F.col("sy").cast("double")
         sxxd, sxyd = F.col("sxx").cast("double"), F.col("sxy").cast("double")
@@ -1026,7 +920,6 @@ def stream_late_data_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from workshop3_etl_spark.sources.tables import load_table
 
-    sink = f"stream_late_{abs(hash(sf_dir)) % 10_000_000}"
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "event_type"
     )
@@ -1055,16 +948,14 @@ def stream_late_data_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy(F.window("ts", "1 hour").alias("w"))
             .agg(F.count(F.lit(1)).cast("long").alias("n"))
         )
-        with _few_state_partitions(spark):
-            q = (
-                agg.writeStream.format("memory")
-                .queryName(sink)
-                .outputMode("append")
-                .option("checkpointLocation", f"{root}/ck")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        with memory_sink(agg, "stream_late", "append", f"{root}/ck") as (
+            rows,
+            q,
+        ):
+            s = rows.agg(
+                F.count(F.lit(1)).cast("long").alias("w"),
+                F.sum("n").cast("long").alias("e"),
+            ).collect()[0]
         import json
 
         n_dropped = 0
@@ -1072,14 +963,6 @@ def stream_late_data_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
             d = json.loads(p) if isinstance(p, str) else json.loads(p.json)
             for so in d.get("stateOperators", []):
                 n_dropped += so.get("numRowsDroppedByWatermark", 0) or 0
-        s = (
-            spark.table(sink)
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("w"),
-                F.sum("n").cast("long").alias("e"),
-            )
-            .collect()[0]
-        )
         n_input = ev.filter(day <= 20).count() + ev.filter(
             (day > 20) & (day <= 25)
         ).count() + ev.filter((day > 25) | (day == 2)).count()
@@ -1104,7 +987,7 @@ def stream_late_data_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------
 # Incrementally-maintained quantile service (streaming/rollup.py
-# maintain_histogram): the fixed-grid histogram is the mergeable
+# HISTOGRAM): the fixed-grid histogram is the mergeable
 # quantile state — per-bin integer sums, so the streaming state
 # equals the batch-built histogram EXACTLY for any micro-batch split,
 # and a probe needs only the domain-bounded bin frame. The p-quantile
@@ -1157,7 +1040,7 @@ ORDER BY pct
 def stream_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """p50/p90/p99 brackets of the event value served from the
     histogram state maintained by the foreachBatch job
-    (streaming/rollup.maintain_histogram): per percentile the rank
+    (streaming/rollup.HISTOGRAM): per percentile the rank
     target, the bracketing bin, and its [lo, hi) cents bounds. The
     multi-epoch merge, replay, and compaction story is pinned by
     tests/test_incremental_rollup.py; this query proves the composed
@@ -1170,18 +1053,16 @@ def stream_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     from workshop3_etl_spark.streaming.rollup import (
+        HISTOGRAM,
         HIST_BIN_CENTS,
-        maintain_histogram,
-        read_histogram,
     )
 
     with tempfile.TemporaryDirectory() as workdir:
         state = f"{workdir}/hist"
-        with _few_state_partitions(spark):
-            maintain_histogram(
-                spark, _events_stream(spark, sf_dir), state, f"{workdir}/ck"
-            )
-        bins = read_histogram(spark, state)
+        HISTOGRAM.maintain(
+            _events_stream(spark, sf_dir), state, f"{workdir}/ck"
+        )
+        bins = HISTOGRAM.read(spark, state)
         spine = Window.orderBy("bin").rowsBetween(
             Window.unboundedPreceding, 0
         )
@@ -1253,23 +1134,17 @@ def mv_monthly_from_daily_rollup(
 ) -> DataFrame:
     """Monthly event counts and value cents per type, answered from
     the DAILY rollup maintained by the foreachBatch job
-    (streaming/rollup.maintain_rollup) — the materialized-view
+    (streaming/rollup.ROLLUP) — the materialized-view
     rewrite, proven against the direct monthly aggregate over raw
     events. The probe touches only the day x type rollup frame; the
     maintenance job's replay/compaction story is pinned by
     tests/test_incremental_rollup.py."""
-    from workshop3_etl_spark.streaming.rollup import (
-        maintain_rollup,
-        read_rollup,
-    )
+    from workshop3_etl_spark.streaming.rollup import ROLLUP
 
     with tempfile.TemporaryDirectory() as workdir:
         state = f"{workdir}/rollup"
-        with _few_state_partitions(spark):
-            maintain_rollup(
-                spark, _events_stream(spark, sf_dir), state, f"{workdir}/ck"
-            )
-        mv = read_rollup(spark, state)
+        ROLLUP.maintain(_events_stream(spark, sf_dir), state, f"{workdir}/ck")
+        mv = ROLLUP.read(spark, state)
         result = (
             mv.groupBy(
                 F.trunc("day", "month").alias("month"), "event_type"
@@ -1319,24 +1194,15 @@ def stream_state_store_inspect(
     answer; on a live stream the same read diagnoses state size and
     skew per key without stopping the job.
     """
-    sink = f"state_inspect_{abs(hash(sf_dir)) % 10_000_000}"
     agg = (
         _events_stream(spark, sf_dir)
         .withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 hour").alias("w"), F.col("event_type"))
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    with tempfile.TemporaryDirectory() as ckpt:
-        with _few_state_partitions(spark):
-            (
-                agg.writeStream.format("memory")
-                .queryName(sink)
-                .outputMode("complete")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-                .awaitTermination()
-            )
+    with tempfile.TemporaryDirectory() as ckpt, memory_sink(
+        agg, "state_inspect", "complete", ckpt
+    ) as (rows, _):
         state = spark.read.format("statestore").load(ckpt)
         result = (
             state.select(
@@ -1443,18 +1309,9 @@ def stream_stream_left_outer_join_closed(
         "left_outer",
     ).select("v_user", "v_ts", "v_id", "p_id")
 
-    sink = f"stream_loj_{abs(hash(sf_dir)) % 10_000_000}"
-    with tempfile.TemporaryDirectory() as ckpt:
-        with _few_state_partitions(spark):
-            (
-                joined.writeStream.format("memory")
-                .queryName(sink)
-                .outputMode("append")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-                .awaitTermination()
-            )
+    with tempfile.TemporaryDirectory() as ckpt, memory_sink(
+        joined, "stream_loj", "append", ckpt
+    ) as (rows, _):
         # closed-region cutoff from the STATIC table (deterministic)
         from workshop3_etl_spark.sources.tables import load_table
 
@@ -1464,7 +1321,7 @@ def stream_stream_left_outer_join_closed(
             .first()["m"]
         )
         result = (
-            spark.table(sink)
+            rows
             .filter(
                 F.col("v_ts")
                 < F.lit(max_ts) - F.expr("INTERVAL 4 HOUR")
@@ -1484,7 +1341,7 @@ def stream_stream_left_outer_join_closed(
 
 
 # --------------------------------------------------------------------
-# Streaming quantizer refresh (streaming/rollup.maintain_quantizer):
+# Streaming quantizer refresh (streaming/rollup.QUANTIZER):
 # the k-means UPDATE step's per-(cell, dim) grid sums maintained per
 # micro-batch under the FROZEN production quantizer, then one
 # floor-div pass over the K*D state rows refreshes the centroids —
@@ -1566,20 +1423,15 @@ def stream_kmeans_quantizer_refresh(
 
     from workshop3_etl_spark.operators.ivf_centroids import IVF_CENTROIDS
     from workshop3_etl_spark.streaming.rollup import (
+        QUANTIZER,
         _QUANT_GRID,
-        maintain_quantizer,
-        read_quantizer_sums,
     )
 
     with tempfile.TemporaryDirectory() as workdir:
         state = f"{workdir}/quant"
-        with _few_state_partitions(spark):
-            maintain_quantizer(
-                spark,
-                table_stream(spark, sf_dir, "embeddings"),
-                state,
-                f"{workdir}/ck",
-            )
+        QUANTIZER.maintain(
+            table_stream(spark, sf_dir, "embeddings"), state, f"{workdir}/ck"
+        )
         spine = spark.createDataFrame(
             [
                 (k, d + 1, math.floor(c[d] * float(_QUANT_GRID)))
@@ -1588,7 +1440,7 @@ def stream_kmeans_quantizer_refresh(
             ],
             "cell int, dim int, fg long",
         )
-        merged = read_quantizer_sums(spark, state)
+        merged = QUANTIZER.read(spark, state)
         result = (
             spine.join(F.broadcast(merged), ["cell", "dim"], "left")
             .selectExpr(
@@ -1728,7 +1580,7 @@ def embedding_quantizer_drift(
 
 
 # --------------------------------------------------------------------
-# Streaming bigram-LM refresh (streaming/rollup.maintain_lm): the
+# Streaming bigram-LM refresh (streaming/rollup.BIGRAM_LM): the
 # CCNet-style quality model's (lang, w1, w2) counts maintained per
 # micro-batch over the documents stream, then one rollup over the
 # live partials refreshes the model — counts are associative under
@@ -1789,21 +1641,14 @@ def stream_lm_bigram_refresh(
     equals the one-shot batch training pass."""
     from pyspark.sql import Window
 
-    from workshop3_etl_spark.streaming.rollup import (
-        maintain_lm,
-        read_lm_counts,
-    )
+    from workshop3_etl_spark.streaming.rollup import BIGRAM_LM
 
     with tempfile.TemporaryDirectory() as workdir:
         state = f"{workdir}/lm"
-        with _few_state_partitions(spark):
-            maintain_lm(
-                spark,
-                table_stream(spark, sf_dir, "documents"),
-                state,
-                f"{workdir}/ck",
-            )
-        c2 = read_lm_counts(spark, state)
+        BIGRAM_LM.maintain(
+            table_stream(spark, sf_dir, "documents"), state, f"{workdir}/ck"
+        )
+        c2 = BIGRAM_LM.read(spark, state)
         wt = Window.partitionBy("lang").orderBy(
             F.desc("c2"), "w1", "w2"
         )
@@ -1837,7 +1682,7 @@ def stream_lm_bigram_refresh(
 
 
 # --------------------------------------------------------------------
-# Streaming BM25-index refresh (streaming/rollup.maintain_bm25): the
+# Streaming BM25-index refresh (streaming/rollup.BM25): the
 # search family's maintenance leg — per-term (df, cf) plus the corpus
 # (n_docs, n_tokens) row maintained as epoch partials over the
 # documents stream (each doc arrives in exactly one batch, so the
@@ -1908,21 +1753,14 @@ def stream_bm25_index_refresh(
         _BM25_RANK_HI,
         _BM25_RANK_LO,
     )
-    from workshop3_etl_spark.streaming.rollup import (
-        maintain_bm25,
-        read_bm25_index,
-    )
+    from workshop3_etl_spark.streaming.rollup import BM25
 
     with tempfile.TemporaryDirectory() as workdir:
         state = f"{workdir}/bm25"
-        with _few_state_partitions(spark):
-            maintain_bm25(
-                spark,
-                table_stream(spark, sf_dir, "documents"),
-                state,
-                f"{workdir}/ck",
-            )
-        idx = read_bm25_index(spark, state)
+        BM25.maintain(
+            table_stream(spark, sf_dir, "documents"), state, f"{workdir}/ck"
+        )
+        idx = BM25.read(spark, state)
         stats = idx.filter(F.col("term").isNull()).selectExpr(
             "df as n_docs", "cf as n_tokens"
         )
@@ -1947,7 +1785,7 @@ def stream_bm25_index_refresh(
 
 # --------------------------------------------------------------------
 # Streaming covariance-moment refresh (streaming/rollup.
-# maintain_moments): the spectral family's maintenance leg —
+# MOMENTS): the spectral family's maintenance leg —
 # embedding_spectral_norm_power trains on a D x D moment artifact;
 # this operator maintains those integer moment sums as epoch partials
 # over the embeddings stream and surfaces the refreshed per-dimension
@@ -2000,21 +1838,14 @@ def stream_covariance_moment_refresh(
     assertion): the maintained integer moment sums are associative
     under any micro-batch split, so the refreshed state equals the
     one-shot batch moment pass the spectral-norm trainer runs."""
-    from workshop3_etl_spark.streaming.rollup import (
-        maintain_moments,
-        read_moments,
-    )
+    from workshop3_etl_spark.streaming.rollup import MOMENTS
 
     with tempfile.TemporaryDirectory() as workdir:
         state = f"{workdir}/moments"
-        with _few_state_partitions(spark):
-            maintain_moments(
-                spark,
-                table_stream(spark, sf_dir, "embeddings"),
-                state,
-                f"{workdir}/ck",
-            )
-        mom = read_moments(spark, state).persist()
+        MOMENTS.maintain(
+            table_stream(spark, sf_dir, "embeddings"), state, f"{workdir}/ck"
+        )
+        mom = MOMENTS.read(spark, state).persist()
         mom.count()
         n = mom.filter("da = 0 and db = 0").selectExpr("v as n_vecs")
         marg = mom.filter("da >= 1 and db = 0").selectExpr(
@@ -2046,7 +1877,7 @@ def stream_covariance_moment_refresh(
 
 # --------------------------------------------------------------------
 # Streaming n-gram novelty refresh (streaming/rollup.
-# maintain_novelty): the maintenance leg of corpus_ngram_novelty_
+# NOVELTY): the maintenance leg of corpus_ngram_novelty_
 # curve — per-gram first-shard attribution kept as MIN-mergeable
 # epoch partials (idempotent even under partial replay), per-shard
 # doc/instance counters as disjoint sums. Batch equivalence (the
@@ -2078,19 +1909,15 @@ def stream_ngram_novelty_refresh(
         assemble_novelty_curve,
     )
     from workshop3_etl_spark.streaming.rollup import (
-        maintain_novelty,
+        NOVELTY,
         read_novelty_state,
     )
 
     with tempfile.TemporaryDirectory() as workdir:
         state = f"{workdir}/novelty"
-        with _few_state_partitions(spark):
-            maintain_novelty(
-                spark,
-                table_stream(spark, sf_dir, "documents"),
-                state,
-                f"{workdir}/ck",
-            )
+        NOVELTY.maintain(
+            table_stream(spark, sf_dir, "documents"), state, f"{workdir}/ck"
+        )
         firsts, per_shard = read_novelty_state(spark, state)
         novel = firsts.groupBy(
             F.col("first_shard").alias("shard")
@@ -2107,7 +1934,7 @@ def stream_ngram_novelty_refresh(
 
 # --------------------------------------------------------------------
 # Streaming decision-stump histogram refresh (streaming/rollup.
-# maintain_stump_hist): the maintenance leg of
+# STUMP): the maintenance leg of
 # ml_decision_stump_price_qty — per-price-bin label moments (n,
 # sum_y) kept as epoch partials, the served split recomputed from
 # the merged state through ml.stump_best_from_bins (the SAME scorer
@@ -2138,21 +1965,14 @@ def stream_stump_histogram_refresh(
     proving the maintained histogram is batch-equivalent under the
     file stream's micro-batching."""
     from workshop3_etl_spark.ml import stump_best_from_bins
-    from workshop3_etl_spark.streaming.rollup import (
-        maintain_stump_hist,
-        read_stump_hist,
-    )
+    from workshop3_etl_spark.streaming.rollup import STUMP
 
     with tempfile.TemporaryDirectory() as workdir:
         state = f"{workdir}/stump_hist"
-        with _few_state_partitions(spark):
-            maintain_stump_hist(
-                spark,
-                table_stream(spark, sf_dir, "lineitem"),
-                state,
-                f"{workdir}/ck",
-            )
-        bins = read_stump_hist(spark, state).persist()
+        STUMP.maintain(
+            table_stream(spark, sf_dir, "lineitem"), state, f"{workdir}/ck"
+        )
+        bins = STUMP.read(spark, state).persist()
         bins.count()
         out = stump_best_from_bins(bins).localCheckpoint(eager=True)
         bins.unpersist()

@@ -1,11 +1,15 @@
-"""Crash-safe folding of epoch-partitioned partial state.
+"""The epoch-partial state protocol: write, read and crash-safe fold.
 
 Every incremental job in this engine writes its micro-batch output
-under ``epoch=<batch id>/...`` partitions (overwrite-by-epoch makes
-replays idempotent — see streaming/rollup.py). Partial-state tables
-therefore grow one partition per batch; this module is the shared
-maintenance protocol that folds old epochs into a base partition
-WITHOUT ever changing what readers see, even across crashes:
+under ``epoch=<batch id>/...`` partitions through ``write_epoch``: each
+micro-batch overwrites only its own epoch, so a batch replayed after
+its write committed but before the streaming checkpoint did rewrites
+the same partition from the same input (no read-modify-write, no
+double count). A maintained-state family (streaming/rollup.py) is an
+``EpochState``: its per-batch partial and its merge, nothing else.
+Partial-state tables grow one partition per batch; ``compact_partials``
+folds old epochs into a base partition WITHOUT ever changing what
+readers see, even across crashes:
 
 - Each fold writes its output to a FRESH base generation
   (epoch = -2, -3, -4, ...; epoch = -1 is reserved exclusively for
@@ -37,9 +41,13 @@ equivalent.)
 from __future__ import annotations
 
 from collections.abc import Callable, Sequence
+from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from workshop3_etl_spark.sources.lakehouse import dynamic_partition_overwrite
+from workshop3_etl_spark.streaming.runner import run_available_now
 
 BASE_MANIFEST = "_state_base.json"
 
@@ -83,6 +91,31 @@ def read_live(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path).where(
         live_filter(read_base_manifest(path))
     )
+
+
+def write_epoch(
+    batch: DataFrame,
+    epoch_id: int,
+    path: str,
+    partial: Callable[[DataFrame], DataFrame] = lambda rows: rows,
+    partition_cols: Sequence[str] = ("epoch",),
+) -> None:
+    """foreachBatch body: write ``partial(batch)`` under the batch's
+    own ``epoch=`` partition (idempotent under replay). An empty batch
+    writes nothing; its partial would be empty too, so the probe runs
+    on the raw batch and the partial is computed once, in the write."""
+    if batch.isEmpty():
+        return
+    rows = partial(batch).withColumn("epoch", F.lit(int(epoch_id)))
+    # foreachBatch hands over a frame bound to a CLONED SparkSession
+    # with its own conf — session-scoped settings (the dynamic
+    # partition-overwrite mode below) must be applied to THAT session
+    # or the write silently runs in static mode and deletes sibling
+    # partitions.
+    with dynamic_partition_overwrite(batch.sparkSession):
+        rows.write.mode("overwrite").partitionBy(*partition_cols).parquet(
+            path
+        )
 
 
 def compact_partials(
@@ -156,10 +189,6 @@ def compact_partials(
     )
     if not folded.take(1):
         return
-    from workshop3_etl_spark.sources.lakehouse import (
-        dynamic_partition_overwrite,
-    )
-
     with dynamic_partition_overwrite(spark):
         folded.write.mode("overwrite").partitionBy(
             *partition_cols
@@ -182,3 +211,45 @@ def compact_partials(
     # that load the new manifest already exclude the stale dirs, so
     # correctness is unaffected either way; the next compaction
     # reclaims the space after a full interval's grace window.
+
+
+@dataclass(frozen=True)
+class EpochState:
+    """A maintained-state family, declared by two functions: ``partial``
+    turns one micro-batch into state rows, and ``merge`` folds any set
+    of state rows (the live partials at read, the old epochs at
+    compaction) into the same columns, minus ``epoch``. The merge must
+    be associative (integer sums, maxes, mins), so a read after any
+    micro-batch split or any compaction is the same."""
+
+    partial: Callable[[DataFrame], DataFrame]
+    merge: Callable[[DataFrame], DataFrame]
+    partition_cols: tuple[str, ...] = ("epoch",)
+
+    def write(self, batch: DataFrame, epoch_id: int, path: str) -> None:
+        """One micro-batch's partial under its epoch partition."""
+        write_epoch(batch, epoch_id, path, self.partial, self.partition_cols)
+
+    def maintain(
+        self, stream: DataFrame, path: str, checkpoint_dir: str
+    ) -> None:
+        """Run the maintenance job over everything available now."""
+        run_available_now(
+            stream.writeStream.foreachBatch(
+                lambda batch, epoch_id: self.write(batch, epoch_id, path)
+            ),
+            checkpoint_dir,
+        )
+
+    def read(self, spark: SparkSession, path: str) -> DataFrame:
+        """The merged state over the live partials."""
+        return self.merge(read_live(spark, path))
+
+    def compact(
+        self, spark: SparkSession, path: str, through_epoch: int
+    ) -> None:
+        """Fold committed epochs <= ``through_epoch`` into a new base
+        generation (see ``compact_partials`` for the horizon rule)."""
+        compact_partials(
+            spark, path, through_epoch, self.merge, self.partition_cols
+        )

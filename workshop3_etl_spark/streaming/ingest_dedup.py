@@ -28,13 +28,13 @@ Scale shape: per batch, only (doc_id, fingerprint, band_id, band_key)
 rows move — never text. The index probe is an equi-join on fingerprint
 / (band_id, band_key); at corpus scale the index is a bucketed table
 on those keys so the probe co-locates without a full index shuffle.
-Writes are epoch-partitioned with dynamic partition overwrite, and
-the index probe EXCLUDES the current epoch's partition — so a batch
-replayed after its write committed but before the streaming
-checkpoint did (the crash window) does not reject its own documents
-against the half-written index; it rewrites its epoch partitions
-from the same inputs (the same replay contract as
-streaming/rollup.py).
+Both tables are written through the shared epoch writer
+(streaming/compaction.write_epoch), and the index probe EXCLUDES the
+current epoch's partition — so a batch replayed after its write
+committed but before the streaming checkpoint did (the crash window)
+does not reject its own documents against the half-written index; it
+rewrites its epoch partitions from the same inputs (the replay
+contract of every maintained state, streaming/compaction.py).
 
 Reference parity: the reference has no streaming dedup; this composes
 the brief's dedup family (operators/dedup.py) with the S2-S4
@@ -50,6 +50,12 @@ from workshop3_etl_spark.operators.dedup import (
     doc_fingerprints,
     minhash_band_frame,
 )
+from workshop3_etl_spark.streaming.compaction import (
+    compact_partials,
+    read_live,
+    write_epoch,
+)
+from workshop3_etl_spark.streaming.runner import run_available_now
 
 INDEX_COLS = ("doc_id", "fingerprint", "band_id", "band_key")
 AUDIT_COLS = ("doc_a", "doc_b")
@@ -64,8 +70,6 @@ def _read_or_none(spark: SparkSession, path: str) -> DataFrame | None:
     would silently re-admit duplicates and write them INTO the index.
     """
     from pyspark.errors import AnalysisException
-
-    from workshop3_etl_spark.streaming.compaction import read_live
 
     try:
         df = read_live(spark, path)
@@ -94,15 +98,6 @@ def ingest_dedup_batch(
     audit_path: str,
 ) -> None:
     """foreachBatch body: admit/reject/flag one micro-batch."""
-    from workshop3_etl_spark.sources.lakehouse import (
-        dynamic_partition_overwrite,
-    )
-
-    # foreachBatch hands over a frame bound to a CLONED SparkSession
-    # with its own conf — session-scoped settings (like the dynamic
-    # partition-overwrite mode below) must be applied to THAT session
-    # or the write silently runs in static mode and deletes sibling
-    # partitions.
     spark = batch.sparkSession
     docs = batch.select("doc_id", "text")
     fp = doc_fingerprints(docs)
@@ -157,21 +152,11 @@ def ingest_dedup_batch(
             F.greatest(F.col("n.doc_id"), F.col("i.doc_id")).alias("doc_b"),
         )
         pairs = pairs.unionByName(cross)
-    audit = (
-        pairs.distinct()
-        .select(*AUDIT_COLS)
-        .withColumn("epoch", F.lit(int(epoch_id)))
-    )
-
     # materialize BEFORE the index write: the audit plan reads the
     # index partitions the epoch write is about to touch
-    audit = audit.localCheckpoint(eager=True)
-    out_index = sigs.withColumn("epoch", F.lit(int(epoch_id)))
-    with dynamic_partition_overwrite(spark):
-        out_index.write.mode("overwrite").partitionBy("epoch").parquet(
-            index_path
-        )
-        audit.write.mode("overwrite").partitionBy("epoch").parquet(audit_path)
+    audit = pairs.distinct().select(*AUDIT_COLS).localCheckpoint(eager=True)
+    write_epoch(sigs, epoch_id, index_path)
+    write_epoch(audit, epoch_id, audit_path)
 
 
 def maintain_ingest_dedup(
@@ -182,30 +167,23 @@ def maintain_ingest_dedup(
     checkpoint_dir: str,
 ) -> None:
     """Run ingest dedup to completion over available files."""
-    (
+    run_available_now(
         docs_stream.writeStream.foreachBatch(
             lambda b, epoch: ingest_dedup_batch(
                 b, epoch, index_path, audit_path
             )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+        ),
+        checkpoint_dir,
     )
 
 
 def read_admitted_ids(spark: SparkSession, index_path: str) -> DataFrame:
     """Distinct admitted doc_ids from the index (one row per doc)."""
-    from workshop3_etl_spark.streaming.compaction import read_live
-
     return read_live(spark, index_path).select("doc_id").distinct()
 
 
 def read_audit_pairs(spark: SparkSession, audit_path: str) -> DataFrame:
     """Distinct flagged near-dup pairs across all epochs."""
-    from workshop3_etl_spark.streaming.compaction import read_live
-
     return read_live(spark, audit_path).select(*AUDIT_COLS).distinct()
 
 
@@ -223,8 +201,6 @@ def compact_index(
     Probe behavior is unchanged: base epochs are negative, so the
     current-epoch exclusion (always >= 0) never filters folded rows.
     """
-    from workshop3_etl_spark.streaming.compaction import compact_partials
-
     compact_partials(
         spark,
         index_path,
@@ -240,8 +216,6 @@ def compact_audit(
     canonical pair can be flagged in several epochs (new doc colliding
     with an indexed one, later another collision in the same pair's
     bucket), and read_audit_pairs reads through a distinct anyway."""
-    from workshop3_etl_spark.streaming.compaction import compact_partials
-
     compact_partials(
         spark,
         audit_path,

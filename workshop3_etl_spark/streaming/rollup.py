@@ -1,20 +1,25 @@
-"""Incremental materialized rollup: a streaming foreachBatch that
-maintains a day-partitioned aggregate so the rollup is always
-queryable without rescanning the fact stream — the engine's
-hypertable-continuous-aggregate shape.
+"""The engine's maintained streaming state: eleven families of
+epoch-partial state, each kept current by a foreachBatch job so its
+answer is always queryable without rescanning the fact stream — the
+incremental rollup (the hypertable-continuous-aggregate shape, with
+decayed counters as a read-time view over it), CMS, HLL, OLS,
+histogram, quantizer, bigram LM, BM25, covariance moments, n-gram
+novelty and decision stump.
 
-Write shape: each micro-batch appends its OWN per-day partial
-aggregate under ``epoch=<batch id>/day=<d>/`` with dynamic partition
-overwrite. No read-modify-write — a replayed batch (crash after the
-write committed but before the streaming checkpoint did) simply
-rewrites its own epoch partitions from the same inputs, which makes
-the job idempotent across exactly the crash window that breaks
-merge-style maintenance (the prior design read the rollup back and
-re-added the batch, so a replay double-counted). Reads aggregate the
-partials; day-level partition pruning still applies through the
-nested layout (``epoch=*/day=d``). In production a compactor folds
-epochs older than the checkpoint horizon into a base partition — a
-pure layout optimization that never changes results.
+A family declares two things, once, as a
+``compaction.EpochState``: its per-micro-batch ``partial`` (the
+``_batch_*_partial`` functions below) and its associative ``merge``.
+Everything else is shared and lives in streaming/compaction.py: the
+layout (each micro-batch overwrites its OWN ``epoch=<batch id>/``
+partition, so a batch replayed in the crash window rewrites itself
+instead of double-counting), the read (``merge`` over the live
+partials), the crash-safe compaction (``merge`` over the old epochs)
+and the maintenance job (every availableNow stream runs through
+streaming/runner.py). ``FAMILY.maintain(stream, path, ckpt)``,
+``FAMILY.read(spark, path)``, ``FAMILY.write(batch, epoch, path)``
+and ``FAMILY.compact(spark, path, through_epoch)`` are the whole
+surface. The rollup alone also partitions by ``day``, so a
+day-filtered read prunes to ``epoch=*/day=d``.
 
 Reference parity: the reference maintains running per-country
 aggregates in a process-local dict (`kafka/consumer.py:123-151`);
@@ -27,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-ROLLUP_COLS = ("day", "event_type", "n_events", "value_cents")
+from workshop3_etl_spark.streaming.compaction import EpochState, read_live
 
 
 def _batch_rollup(batch: DataFrame) -> DataFrame:
@@ -47,70 +52,14 @@ def _batch_rollup(batch: DataFrame) -> DataFrame:
     )
 
 
-def write_rollup_partial(batch: DataFrame, epoch_id: int, rollup_path: str) -> None:
-    """foreachBatch body: write one micro-batch's per-day partial
-    under its epoch partition (idempotent under replay)."""
-    from workshop3_etl_spark.sources.lakehouse import (
-        dynamic_partition_overwrite,
-    )
-
-    # foreachBatch hands over a frame bound to a CLONED SparkSession
-    # with its own conf — session-scoped settings (the dynamic
-    # partition-overwrite mode below) must be applied to THAT session
-    # or the write silently runs in static mode and deletes sibling
-    # partitions.
-    spark = batch.sparkSession
-    b = _batch_rollup(batch).withColumn("epoch", F.lit(int(epoch_id)))
-    if not b.take(1):
-        return
-    with dynamic_partition_overwrite(spark):
-        b.write.mode("overwrite").partitionBy("epoch", "day").parquet(
-            rollup_path
-        )
-
-
-# Compaction: folding committed epochs into a base partition is
-# delegated to the shared crash-safe protocol in
-# streaming/compaction.py (generation-numbered bases + atomically
-# replaced manifest). Re-exported names keep this module the rollup's
-# single import surface.
-from workshop3_etl_spark.streaming.compaction import (  # noqa: E402
-    compact_partials,
-    live_filter as _live_filter,
-    read_base_manifest as _read_base_manifest,
-    read_live as _read_live,
+ROLLUP = EpochState(
+    partial=_batch_rollup,
+    merge=lambda state: state.groupBy("day", "event_type").agg(
+        F.sum("n_events").cast("long").alias("n_events"),
+        F.sum("value_cents").cast("long").alias("value_cents"),
+    ),
+    partition_cols=("epoch", "day"),
 )
-
-
-def read_rollup(spark: SparkSession, rollup_path: str) -> DataFrame:
-    """The rollup view: aggregate the epoch partials. A day-filtered
-    read prunes to ``epoch=*/day=d`` directories."""
-    return (
-        _read_live(spark, rollup_path)
-        .groupBy("day", "event_type")
-        .agg(
-            F.sum("n_events").cast("long").alias("n_events"),
-            F.sum("value_cents").cast("long").alias("value_cents"),
-        )
-    )
-
-
-def maintain_rollup(
-    spark: SparkSession,
-    events_stream: DataFrame,
-    rollup_path: str,
-    checkpoint_dir: str,
-) -> None:
-    """Run the incremental maintenance to completion (availableNow)."""
-    (
-        events_stream.writeStream.foreachBatch(
-            lambda b, epoch: write_rollup_partial(b, epoch, rollup_path)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
 
 
 # --------------------------------------------------------------------
@@ -141,23 +90,11 @@ def maintain_rollup(
 from workshop3_etl_spark.operators.timeseries import _DECAY_HORIZON_DAYS
 
 
-def maintain_decayed_counters(
-    spark: SparkSession,
-    events_stream: DataFrame,
-    state_path: str,
-    checkpoint_dir: str,
-) -> None:
-    """Run decayed-counter maintenance to completion (availableNow).
-    Same partial-writing job as the rollup — the decayed counter is a
-    read-time view over day-granular state."""
-    maintain_rollup(spark, events_stream, state_path, checkpoint_dir)
-
-
 def read_decayed_counters(spark: SparkSession, state_path: str) -> DataFrame:
     """Query surface over the counter state: the same columns
     ts_decayed_popularity returns, computed with the same per-day
     dyadic weights relative to the max day in state."""
-    daily = read_rollup(spark, state_path).select(
+    daily = ROLLUP.read(spark, state_path).select(
         "day", "event_type", "n_events"
     )
     md = daily.agg(F.max("day").alias("md"))
@@ -186,37 +123,6 @@ def read_decayed_counters(spark: SparkSession, state_path: str) -> DataFrame:
     )
 
 
-def compact_rollup(
-    spark: SparkSession, rollup_path: str, through_epoch: int
-) -> None:
-    """Fold every epoch partition <= ``through_epoch`` into the
-    current base generation's successor, via the shared crash-safe
-    commit protocol (streaming/compaction.py).
-
-    Pure layout maintenance: ``read_rollup`` results are identical
-    before and after (associative integer sums), the per-read
-    aggregation just touches fewer partitions. ``through_epoch`` must
-    be at or below the streaming checkpoint's committed batch id —
-    epochs the source could still replay must keep their own
-    partitions so a replayed batch overwrites itself rather than
-    double-landing next to folded state.
-    """
-
-    def fold(old: DataFrame) -> DataFrame:
-        return old.groupBy("day", "event_type").agg(
-            F.sum("n_events").cast("long").alias("n_events"),
-            F.sum("value_cents").cast("long").alias("value_cents"),
-        )
-
-    compact_partials(
-        spark,
-        rollup_path,
-        through_epoch,
-        fold,
-        partition_cols=("epoch", "day"),
-    )
-
-
 # --------------------------------------------------------------------
 # Incremental COUNT-MIN SKETCH: streaming heavy-hitter state as
 # epoch-partitioned partial sketches. CMS is a MERGEABLE summary —
@@ -239,6 +145,7 @@ def compact_rollup(
 from workshop3_etl_spark.operators.sketches import (  # noqa: E402
     CMS_D,
     cms_bucket_sql,
+    hll_register_partial,
 )
 
 
@@ -254,72 +161,12 @@ def _batch_cms_partial(batch: DataFrame, key_col: str) -> DataFrame:
     )
 
 
-def write_cms_partial(
-    batch: DataFrame, epoch_id: int, state_path: str, key_col: str = "user_id"
-) -> None:
-    """foreachBatch body: one micro-batch's partial sketch under its
-    epoch partition (idempotent under replay)."""
-    from workshop3_etl_spark.sources.lakehouse import (
-        dynamic_partition_overwrite,
-    )
-
-    spark = batch.sparkSession
-    # emptiness probe on the RAW batch (the grid is empty iff the
-    # batch is — no filter between them), so the stack+groupBy
-    # aggregation runs exactly once, in the write
-    if batch.isEmpty():
-        return
-    b = _batch_cms_partial(batch, key_col).withColumn(
-        "epoch", F.lit(int(epoch_id))
-    )
-    with dynamic_partition_overwrite(spark):
-        b.write.mode("overwrite").partitionBy("epoch").parquet(state_path)
-
-
-def maintain_cms(
-    spark: SparkSession,
-    events_stream: DataFrame,
-    state_path: str,
-    checkpoint_dir: str,
-    key_col: str = "user_id",
-) -> None:
-    """Run sketch maintenance to completion (availableNow)."""
-    (
-        events_stream.writeStream.foreachBatch(
-            lambda b, epoch: write_cms_partial(b, epoch, state_path, key_col)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-
-
-def read_cms_sketch(spark: SparkSession, state_path: str) -> DataFrame:
-    """The merged sketch: elementwise-summed partials, bounded at
-    d x w rows."""
-    return (
-        _read_live(spark, state_path)
-        .groupBy("i", "bucket")
-        .agg(F.sum("c").cast("long").alias("c"))
-    )
-
-
-def compact_cms(
-    spark: SparkSession, state_path: str, through_epoch: int
-) -> None:
-    """Fold committed sketch epochs into the base generation (shared
-    crash-safe protocol; counter sums are associative, so reads are
-    identical before and after)."""
-
-    def fold(old: DataFrame) -> DataFrame:
-        return old.groupBy("i", "bucket").agg(
-            F.sum("c").cast("long").alias("c")
-        )
-
-    compact_partials(
-        spark, state_path, through_epoch, fold, partition_cols=("epoch",)
-    )
+CMS = EpochState(
+    partial=lambda batch: _batch_cms_partial(batch, "user_id"),
+    merge=lambda state: state.groupBy("i", "bucket").agg(
+        F.sum("c").cast("long").alias("c")
+    ),
+)
 
 
 # --------------------------------------------------------------------
@@ -341,70 +188,10 @@ def compact_cms(
 # --------------------------------------------------------------------
 
 
-def write_hll_partial(
-    batch: DataFrame, epoch_id: int, state_path: str, key_col: str = "user_id"
-) -> None:
-    """foreachBatch body: one micro-batch's (b, m_b) register partial
-    under its epoch partition (idempotent under replay — and, because
-    the merge is a max, harmless even if the same rows were fed to a
-    second epoch)."""
-    from workshop3_etl_spark.operators.sketches import hll_register_partial
-    from workshop3_etl_spark.sources.lakehouse import (
-        dynamic_partition_overwrite,
-    )
-
-    spark = batch.sparkSession
-    if batch.isEmpty():
-        return
-    b = hll_register_partial(batch, key_col).withColumn(
-        "epoch", F.lit(int(epoch_id))
-    )
-    with dynamic_partition_overwrite(spark):
-        b.write.mode("overwrite").partitionBy("epoch").parquet(state_path)
-
-
-def maintain_hll(
-    spark: SparkSession,
-    events_stream: DataFrame,
-    state_path: str,
-    checkpoint_dir: str,
-    key_col: str = "user_id",
-) -> None:
-    """Run HLL register maintenance to completion (availableNow)."""
-    (
-        events_stream.writeStream.foreachBatch(
-            lambda b, epoch: write_hll_partial(b, epoch, state_path, key_col)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-
-
-def read_hll_registers(spark: SparkSession, state_path: str) -> DataFrame:
-    """The merged registers: per-bucket max over the live partials,
-    bounded at 256 rows."""
-    return (
-        _read_live(spark, state_path)
-        .groupBy("b")
-        .agg(F.max("m_b").alias("m_b"))
-    )
-
-
-def compact_hll(
-    spark: SparkSession, state_path: str, through_epoch: int
-) -> None:
-    """Fold committed register epochs into the base generation (shared
-    crash-safe protocol; per-bucket max is associative and idempotent,
-    so reads are identical before and after)."""
-
-    def fold(old: DataFrame) -> DataFrame:
-        return old.groupBy("b").agg(F.max("m_b").alias("m_b"))
-
-    compact_partials(
-        spark, state_path, through_epoch, fold, partition_cols=("epoch",)
-    )
+HLL = EpochState(
+    partial=lambda batch: hll_register_partial(batch, "user_id"),
+    merge=lambda state: state.groupBy("b").agg(F.max("m_b").alias("m_b")),
+)
 
 
 # --------------------------------------------------------------------
@@ -446,75 +233,15 @@ def _batch_ols_partial(batch: DataFrame) -> DataFrame:
     )
 
 
-def write_ols_partial(
-    batch: DataFrame, epoch_id: int, state_path: str
-) -> None:
-    """foreachBatch body: one micro-batch's sufficient-statistic row
-    under its epoch partition (idempotent under replay)."""
-    from workshop3_etl_spark.sources.lakehouse import (
-        dynamic_partition_overwrite,
-    )
-
-    spark = batch.sparkSession
-    if batch.isEmpty():
-        return
-    b = _batch_ols_partial(batch).withColumn("epoch", F.lit(int(epoch_id)))
-    with dynamic_partition_overwrite(spark):
-        b.write.mode("overwrite").partitionBy("epoch").parquet(state_path)
-
-
-def maintain_ols(
-    spark: SparkSession,
-    events_stream: DataFrame,
-    state_path: str,
-    checkpoint_dir: str,
-) -> None:
-    """Run sufficient-statistic maintenance to completion
-    (availableNow)."""
-    (
-        events_stream.writeStream.foreachBatch(
-            lambda b, epoch: write_ols_partial(b, epoch, state_path)
+OLS = EpochState(
+    partial=_batch_ols_partial,
+    merge=lambda state: state.agg(
+        *(
+            F.sum(c).cast("long").alias(c)
+            for c in ("n", "sx", "sy", "sxx", "sxy", "syy")
         )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-
-
-def read_ols_stats(spark: SparkSession, state_path: str) -> DataFrame:
-    """The merged sufficient statistics: one row, summed over the
-    live partials."""
-    return _read_live(spark, state_path).agg(
-        F.sum("n").cast("long").alias("n"),
-        F.sum("sx").cast("long").alias("sx"),
-        F.sum("sy").cast("long").alias("sy"),
-        F.sum("sxx").cast("long").alias("sxx"),
-        F.sum("sxy").cast("long").alias("sxy"),
-        F.sum("syy").cast("long").alias("syy"),
-    )
-
-
-def compact_ols(
-    spark: SparkSession, state_path: str, through_epoch: int
-) -> None:
-    """Fold committed partial rows into the base generation (shared
-    crash-safe protocol; integer sums are associative, so reads are
-    identical before and after)."""
-
-    def fold(old: DataFrame) -> DataFrame:
-        return old.agg(
-            F.sum("n").cast("long").alias("n"),
-            F.sum("sx").cast("long").alias("sx"),
-            F.sum("sy").cast("long").alias("sy"),
-            F.sum("sxx").cast("long").alias("sxx"),
-            F.sum("sxy").cast("long").alias("sxy"),
-            F.sum("syy").cast("long").alias("syy"),
-        )
-
-    compact_partials(
-        spark, state_path, through_epoch, fold, partition_cols=("epoch",)
-    )
+    ),
+)
 
 
 # --------------------------------------------------------------------
@@ -564,69 +291,12 @@ def _batch_hist_partial(batch: DataFrame, value_col: str = "value") -> DataFrame
     )
 
 
-def write_hist_partial(
-    batch: DataFrame, epoch_id: int, state_path: str, value_col: str = "value"
-) -> None:
-    """foreachBatch body: one micro-batch's per-bin counts under its
-    epoch partition (idempotent under replay)."""
-    from workshop3_etl_spark.sources.lakehouse import (
-        dynamic_partition_overwrite,
-    )
-
-    spark = batch.sparkSession
-    if batch.isEmpty():
-        return
-    b = _batch_hist_partial(batch, value_col).withColumn(
-        "epoch", F.lit(int(epoch_id))
-    )
-    with dynamic_partition_overwrite(spark):
-        b.write.mode("overwrite").partitionBy("epoch").parquet(state_path)
-
-
-def maintain_histogram(
-    spark: SparkSession,
-    events_stream: DataFrame,
-    state_path: str,
-    checkpoint_dir: str,
-    value_col: str = "value",
-) -> None:
-    """Run histogram maintenance to completion (availableNow)."""
-    (
-        events_stream.writeStream.foreachBatch(
-            lambda b, epoch: write_hist_partial(
-                b, epoch, state_path, value_col
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-
-
-def read_histogram(spark: SparkSession, state_path: str) -> DataFrame:
-    """The merged histogram: per-bin summed partials, domain-bounded
-    row count."""
-    return (
-        _read_live(spark, state_path)
-        .groupBy("bin")
-        .agg(F.sum("cnt").cast("long").alias("cnt"))
-    )
-
-
-def compact_histogram(
-    spark: SparkSession, state_path: str, through_epoch: int
-) -> None:
-    """Fold committed bin epochs into the base generation (shared
-    crash-safe protocol; per-bin sums are associative, so reads are
-    identical before and after)."""
-
-    def fold(old: DataFrame) -> DataFrame:
-        return old.groupBy("bin").agg(F.sum("cnt").cast("long").alias("cnt"))
-
-    compact_partials(
-        spark, state_path, through_epoch, fold, partition_cols=("epoch",)
-    )
+HISTOGRAM = EpochState(
+    partial=_batch_hist_partial,
+    merge=lambda state: state.groupBy("bin").agg(
+        F.sum("cnt").cast("long").alias("cnt")
+    ),
+)
 
 
 # --------------------------------------------------------------------
@@ -692,55 +362,13 @@ def _batch_quantizer_partial(batch: DataFrame) -> DataFrame:
     )
 
 
-def write_quantizer_partial(
-    batch: DataFrame, epoch_id: int, state_path: str
-) -> None:
-    """foreachBatch body: one micro-batch's grid-sum rows under its
-    epoch partition (idempotent under replay)."""
-    from workshop3_etl_spark.sources.lakehouse import (
-        dynamic_partition_overwrite,
-    )
-
-    spark = batch.sparkSession
-    if batch.isEmpty():
-        return
-    b = _batch_quantizer_partial(batch).withColumn(
-        "epoch", F.lit(int(epoch_id))
-    )
-    with dynamic_partition_overwrite(spark):
-        b.write.mode("overwrite").partitionBy("epoch").parquet(state_path)
-
-
-def maintain_quantizer(
-    spark: SparkSession,
-    embeddings_stream: DataFrame,
-    state_path: str,
-    checkpoint_dir: str,
-) -> None:
-    """Run grid-sum maintenance to completion (availableNow)."""
-    (
-        embeddings_stream.writeStream.foreachBatch(
-            lambda b, epoch: write_quantizer_partial(b, epoch, state_path)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-
-
-def read_quantizer_sums(
-    spark: SparkSession, state_path: str
-) -> DataFrame:
-    """The merged per-(cell, dim) sums over the live partials."""
-    return (
-        _read_live(spark, state_path)
-        .groupBy("cell", "dim")
-        .agg(
-            F.sum("sg").cast("long").alias("sg"),
-            F.sum("n").cast("long").alias("n"),
-        )
-    )
+QUANTIZER = EpochState(
+    partial=_batch_quantizer_partial,
+    merge=lambda state: state.groupBy("cell", "dim").agg(
+        F.sum("sg").cast("long").alias("sg"),
+        F.sum("n").cast("long").alias("n"),
+    ),
+)
 
 
 # --------------------------------------------------------------------
@@ -780,50 +408,12 @@ def _batch_lm_partial(batch: DataFrame) -> DataFrame:
     )
 
 
-def write_lm_partial(
-    batch: DataFrame, epoch_id: int, state_path: str
-) -> None:
-    """foreachBatch body: one micro-batch's bigram-count rows under
-    its epoch partition (idempotent under replay)."""
-    from workshop3_etl_spark.sources.lakehouse import (
-        dynamic_partition_overwrite,
-    )
-
-    spark = batch.sparkSession
-    if batch.isEmpty():
-        return
-    b = _batch_lm_partial(batch).withColumn(
-        "epoch", F.lit(int(epoch_id))
-    )
-    with dynamic_partition_overwrite(spark):
-        b.write.mode("overwrite").partitionBy("epoch").parquet(state_path)
-
-
-def maintain_lm(
-    spark: SparkSession,
-    documents_stream: DataFrame,
-    state_path: str,
-    checkpoint_dir: str,
-) -> None:
-    """Run bigram-count maintenance to completion (availableNow)."""
-    (
-        documents_stream.writeStream.foreachBatch(
-            lambda b, epoch: write_lm_partial(b, epoch, state_path)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-
-
-def read_lm_counts(spark: SparkSession, state_path: str) -> DataFrame:
-    """The merged per-(lang, w1, w2) counts over the live partials."""
-    return (
-        _read_live(spark, state_path)
-        .groupBy("lang", "w1", "w2")
-        .agg(F.sum("c2").cast("long").alias("c2"))
-    )
+BIGRAM_LM = EpochState(
+    partial=_batch_lm_partial,
+    merge=lambda state: state.groupBy("lang", "w1", "w2").agg(
+        F.sum("c2").cast("long").alias("c2")
+    ),
+)
 
 
 # --------------------------------------------------------------------
@@ -862,54 +452,13 @@ def _batch_bm25_partial(batch: DataFrame) -> DataFrame:
     return terms.unionByName(stats)
 
 
-def write_bm25_partial(
-    batch: DataFrame, epoch_id: int, state_path: str
-) -> None:
-    """foreachBatch body: one micro-batch's index partial under its
-    epoch partition (idempotent under replay)."""
-    from workshop3_etl_spark.sources.lakehouse import (
-        dynamic_partition_overwrite,
-    )
-
-    spark = batch.sparkSession
-    if batch.isEmpty():
-        return
-    b = _batch_bm25_partial(batch).withColumn(
-        "epoch", F.lit(int(epoch_id))
-    )
-    with dynamic_partition_overwrite(spark):
-        b.write.mode("overwrite").partitionBy("epoch").parquet(state_path)
-
-
-def maintain_bm25(
-    spark: SparkSession,
-    documents_stream: DataFrame,
-    state_path: str,
-    checkpoint_dir: str,
-) -> None:
-    """Run BM25 index maintenance to completion (availableNow)."""
-    (
-        documents_stream.writeStream.foreachBatch(
-            lambda b, epoch: write_bm25_partial(b, epoch, state_path)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-
-
-def read_bm25_index(spark: SparkSession, state_path: str) -> DataFrame:
-    """The merged index over the live partials: per-term rows plus
-    the term=NULL corpus-stats row."""
-    return (
-        _read_live(spark, state_path)
-        .groupBy("term")
-        .agg(
-            F.sum("df").cast("long").alias("df"),
-            F.sum("cf").cast("long").alias("cf"),
-        )
-    )
+BM25 = EpochState(
+    partial=_batch_bm25_partial,
+    merge=lambda state: state.groupBy("term").agg(
+        F.sum("df").cast("long").alias("df"),
+        F.sum("cf").cast("long").alias("cf"),
+    ),
+)
 
 
 # --------------------------------------------------------------------
@@ -961,50 +510,12 @@ def _batch_moment_partial(batch: DataFrame) -> DataFrame:
     )).unionByName(cnt)
 
 
-def write_moment_partial(
-    batch: DataFrame, epoch_id: int, state_path: str
-) -> None:
-    """foreachBatch body: one micro-batch's moment rows under its
-    epoch partition (idempotent under replay)."""
-    from workshop3_etl_spark.sources.lakehouse import (
-        dynamic_partition_overwrite,
-    )
-
-    spark = batch.sparkSession
-    if batch.isEmpty():
-        return
-    b = _batch_moment_partial(batch).withColumn(
-        "epoch", F.lit(int(epoch_id))
-    )
-    with dynamic_partition_overwrite(spark):
-        b.write.mode("overwrite").partitionBy("epoch").parquet(state_path)
-
-
-def maintain_moments(
-    spark: SparkSession,
-    embeddings_stream: DataFrame,
-    state_path: str,
-    checkpoint_dir: str,
-) -> None:
-    """Run moment-matrix maintenance to completion (availableNow)."""
-    (
-        embeddings_stream.writeStream.foreachBatch(
-            lambda b, epoch: write_moment_partial(b, epoch, state_path)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-
-
-def read_moments(spark: SparkSession, state_path: str) -> DataFrame:
-    """The merged (da, db, v) moment state over the live partials."""
-    return (
-        _read_live(spark, state_path)
-        .groupBy("da", "db")
-        .agg(F.sum("v").cast("long").alias("v"))
-    )
+MOMENTS = EpochState(
+    partial=_batch_moment_partial,
+    merge=lambda state: state.groupBy("da", "db").agg(
+        F.sum("v").cast("long").alias("v")
+    ),
+)
 
 
 # --------------------------------------------------------------------
@@ -1066,63 +577,53 @@ def _batch_novelty_partial(batch: DataFrame) -> DataFrame:
     return grams.unionByName(stats)
 
 
-def write_novelty_partial(
-    batch: DataFrame, epoch_id: int, state_path: str
-) -> None:
-    """foreachBatch body: one micro-batch's novelty partial under its
-    epoch partition (idempotent under replay)."""
-    from workshop3_etl_spark.sources.lakehouse import (
-        dynamic_partition_overwrite,
-    )
-
-    spark = batch.sparkSession
-    if batch.isEmpty():
-        return
-    b = _batch_novelty_partial(batch).withColumn(
-        "epoch", F.lit(int(epoch_id))
-    )
-    with dynamic_partition_overwrite(spark):
-        b.write.mode("overwrite").partitionBy("epoch").parquet(state_path)
-
-
-def maintain_novelty(
-    spark: SparkSession,
-    documents_stream: DataFrame,
-    state_path: str,
-    checkpoint_dir: str,
-) -> None:
-    """Run novelty-state maintenance to completion (availableNow)."""
-    (
-        documents_stream.writeStream.foreachBatch(
-            lambda b, epoch: write_novelty_partial(b, epoch, state_path)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-
-
-def read_novelty_state(
-    spark: SparkSession, state_path: str
-) -> tuple[DataFrame, DataFrame]:
-    """The merged novelty state over the live partials:
-    (firsts(g, first_shard), per_shard(shard, n_docs, n_inst))."""
-    live = _read_live(spark, state_path)
-    firsts = (
-        live.filter(F.col("g").isNotNull())
+def _first_shards(state: DataFrame) -> DataFrame:
+    """Gram rows merged by MIN: (g, shard of first appearance)."""
+    return (
+        state.filter(F.col("g").isNotNull())
         .groupBy("g")
-        .agg(F.min("shard").cast("long").alias("first_shard"))
+        .agg(F.min("shard").cast("long").alias("shard"))
     )
-    per_shard = (
-        live.filter(F.col("g").isNull())
+
+
+def _shard_counters(state: DataFrame) -> DataFrame:
+    """Counter rows merged by SUM: (shard, n_docs, n_inst)."""
+    return (
+        state.filter(F.col("g").isNull())
         .groupBy("shard")
         .agg(
             F.sum("n_docs").cast("long").alias("n_docs"),
             F.sum("n_inst").cast("long").alias("n_inst"),
         )
     )
-    return firsts, per_shard
+
+
+def _merge_novelty(state: DataFrame) -> DataFrame:
+    """Both merge laws, in the partial's row layout."""
+    grams = _first_shards(state).selectExpr(
+        "g",
+        "shard",
+        "cast(0 as bigint) as n_docs",
+        "cast(0 as bigint) as n_inst",
+    )
+    counters = _shard_counters(state).selectExpr(
+        "cast(null as string) as g", "shard", "n_docs", "n_inst"
+    )
+    return grams.unionByName(counters)
+
+
+NOVELTY = EpochState(partial=_batch_novelty_partial, merge=_merge_novelty)
+
+
+def read_novelty_state(
+    spark: SparkSession, state_path: str
+) -> tuple[DataFrame, DataFrame]:
+    """The merged novelty state over the live partials, one frame per
+    merge law: (firsts(g, first_shard), per_shard(shard, n_docs,
+    n_inst))."""
+    live = read_live(spark, state_path)
+    firsts = _first_shards(live).withColumnRenamed("shard", "first_shard")
+    return firsts, _shard_counters(live)
 
 
 # --------------------------------------------------------------------
@@ -1155,67 +656,10 @@ def _batch_stump_partial(batch: DataFrame) -> DataFrame:
     )
 
 
-def write_stump_partial(
-    batch: DataFrame, epoch_id: int, state_path: str
-) -> None:
-    """foreachBatch body: one micro-batch's per-bin label moments
-    under its epoch partition (idempotent under replay)."""
-    from workshop3_etl_spark.sources.lakehouse import (
-        dynamic_partition_overwrite,
-    )
-
-    spark = batch.sparkSession
-    if batch.isEmpty():
-        return
-    b = _batch_stump_partial(batch).withColumn(
-        "epoch", F.lit(int(epoch_id))
-    )
-    with dynamic_partition_overwrite(spark):
-        b.write.mode("overwrite").partitionBy("epoch").parquet(state_path)
-
-
-def maintain_stump_hist(
-    spark: SparkSession,
-    lineitem_stream: DataFrame,
-    state_path: str,
-    checkpoint_dir: str,
-) -> None:
-    """Run stump-histogram maintenance to completion (availableNow)."""
-    (
-        lineitem_stream.writeStream.foreachBatch(
-            lambda b, epoch: write_stump_partial(b, epoch, state_path)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-
-
-def read_stump_hist(spark: SparkSession, state_path: str) -> DataFrame:
-    """The merged label histogram: per-bin sums over live partials."""
-    return (
-        _read_live(spark, state_path)
-        .groupBy("bin_id")
-        .agg(
-            F.sum("n").cast("long").alias("n"),
-            F.sum("sy").cast("long").alias("sy"),
-        )
-    )
-
-
-def compact_stump_hist(
-    spark: SparkSession, state_path: str, through_epoch: int
-) -> None:
-    """Fold committed partials into the base generation (shared
-    crash-safe protocol; per-bin sums are associative)."""
-
-    def fold(old: DataFrame) -> DataFrame:
-        return old.groupBy("bin_id").agg(
-            F.sum("n").cast("long").alias("n"),
-            F.sum("sy").cast("long").alias("sy"),
-        )
-
-    compact_partials(
-        spark, state_path, through_epoch, fold, partition_cols=("epoch",)
-    )
+STUMP = EpochState(
+    partial=_batch_stump_partial,
+    merge=lambda state: state.groupBy("bin_id").agg(
+        F.sum("n").cast("long").alias("n"),
+        F.sum("sy").cast("long").alias("sy"),
+    ),
+)

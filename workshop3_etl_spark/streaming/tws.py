@@ -89,9 +89,9 @@ def stream_tws_user_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     from workshop3_etl_spark.sources.tables import table_stream
     from workshop3_etl_spark.streaming.batch_equivalent import (
         ROCKSDB_PROVIDER,
-        _few_state_partitions,
         state_store_provider,
     )
+    from workshop3_etl_spark.streaming.runner import memory_sink
 
     stream = (
         table_stream(spark, sf_dir, "events")
@@ -108,28 +108,18 @@ def stream_tws_user_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         "Update",
         "None",
     )
-    sink = f"stream_tws_{abs(hash(sf_dir)) % 10_000_000}"
-    with tempfile.TemporaryDirectory() as ckpt:
-        # TWS requires the RocksDB state-store provider.
-        with state_store_provider(spark, ROCKSDB_PROVIDER):
-            with _few_state_partitions(spark):
-                (
-                    out.writeStream.format("memory")
-                    .queryName(sink)
-                    .outputMode("update")
-                    .option("checkpointLocation", ckpt)
-                    .trigger(availableNow=True)
-                    .start()
-                    .awaitTermination()
-                )
+    from pyspark.sql import Window
+
+    # TWS requires the RocksDB state-store provider.
+    with tempfile.TemporaryDirectory() as ckpt, state_store_provider(
+        spark, ROCKSDB_PROVIDER
+    ), memory_sink(out, "stream_tws", "update", ckpt) as (rows, _):
         # Update mode re-emits a key whenever a later micro-batch
         # touches it; the running totals grow monotonically, so the
         # final state per key is its max-n_events row.
-        from pyspark.sql import Window
-
         w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
         return (
-            spark.table(sink)
+            rows
             .withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") == 1)
             .drop("rn")
