@@ -10,7 +10,13 @@ SF_CORRECT = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="tests", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
+    # The ledger's tracer reads SQL executions by position in the status
+    # store, which must not evict any in the session (default: past 1,000).
+    s = get_spark(
+        app_name="tests",
+        cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "8")),
+        extra_conf={"spark.sql.ui.retainedExecutions": "1000000"},
+    )
     yield s
     s.stop()
 

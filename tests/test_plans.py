@@ -8,6 +8,8 @@ sort-merge, they fail before a benchmark ever notices.
 
 from __future__ import annotations
 
+import pytest
+
 from tests.conftest import SF_CORRECT
 from workshop3_etl_spark.operators.relational import (
     q1_pricing_summary,
@@ -24,11 +26,26 @@ def _plan(df) -> str:
     )
 
 
-def test_q6_filter_pushdown(spark):
-    plan = _plan(q6_forecast_revenue(spark, SF_CORRECT))
-    # range predicates must reach the parquet scan
+@pytest.mark.parametrize(
+    "query", [q6_forecast_revenue, q1_pricing_summary], ids=lambda q: q.__name__
+)
+def test_q6_filter_pushdown(spark, query):
+    plan = _plan(query(spark, SF_CORRECT))
+    # range predicates must reach the parquet scan (q1's through the
+    # scan_parallel exchange)
     assert "PushedFilters:" in plan
     assert "l_shipdate" in plan.split("PushedFilters:")[1].split("\n")[0]
+
+
+def test_crossdoc_ngram_fraction_scans_documents_once(spark):
+    """The doc-frequency count is a window over the shingle partition:
+    a groupBy joined back would scan and re-shingle the corpus twice,
+    since Catalyst does not share a repeated subtree."""
+    from workshop3_etl_spark.operators.dedup import dedup_crossdoc_ngram_fraction
+
+    df = dedup_crossdoc_ngram_fraction(spark, SF_CORRECT)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan parquet") == 1
 
 
 def test_q1_column_pruning(spark):
@@ -564,8 +581,8 @@ def _stub_checkpoints(monkeypatch):
     result (collapsing explain output to a bare RDD scan), so both
     cache helpers are stubbed to identity — nothing executes, we only
     explain (the ANN plan-test pattern). lakehouse binds the helpers
-    at module level (for tools/dump_plans.py), so both the cache
-    module AND lakehouse's bindings are patched."""
+    at module level, so both the cache module AND lakehouse's
+    bindings are patched."""
     from workshop3_etl_spark.functions import cache
     from workshop3_etl_spark.sources import lakehouse
 

@@ -219,3 +219,43 @@ def test_empty_index_dir_reads_as_no_index(spark, tmp_path):
     # batch 1 must ingest cleanly against the "empty" index
     ingest_dedup_batch(corpus.limit(50), 1, index, audit)
     assert read_admitted_ids(spark, index).count() == 50
+
+
+def test_audit_reads_empty_when_no_pair_was_ever_flagged(spark, tmp_path):
+    """Two unrelated documents flag no near-duplicate pair, so no audit
+    partition is ever written; the audit and index reads still return
+    frames with their declared columns. The registered stream query
+    still equals its DuckDB oracle."""
+    import duckdb
+
+    from tests.test_oracle_parity import _canon, _normalize
+    from workshop3_etl_spark.plans import registry
+    from workshop3_etl_spark.streaming.ingest_dedup import ingest_dedup_batch
+
+    batch = spark.createDataFrame(
+        [
+            (1, "the quick brown fox jumps over the lazy dog near the river bank"),
+            (2, "stock markets closed higher on tuesday after the central bank report"),
+        ],
+        "doc_id BIGINT, text STRING",
+    )
+    index, audit = str(tmp_path / "index"), str(tmp_path / "audit")
+    ingest_dedup_batch(batch, 0, index, audit)
+    pairs = read_audit_pairs(spark, audit)
+    assert pairs.columns == ["doc_a", "doc_b"] and pairs.count() == 0
+    assert read_admitted_ids(spark, str(tmp_path / "none")).count() == 0
+    assert {r["doc_id"] for r in read_admitted_ids(spark, index).collect()} == {1, 2}
+
+    q = registry.get("stream_ingest_dedup")
+    got = q.fn(spark, SF_SMOKE)
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM '{SF_SMOKE}/documents.parquet'"
+    )
+    res = con.execute(q.oracle)
+    d_norm, _ = _normalize(res.fetchall(), [c[0] for c in res.description])
+    con.close()
+    s_norm, _ = _normalize([tuple(r) for r in got.collect()], got.columns)
+    assert [[_canon(v) for v in r] for r in s_norm] == [
+        [_canon(v) for v in r] for r in d_norm
+    ]

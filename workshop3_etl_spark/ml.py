@@ -2559,7 +2559,7 @@ def search_hybrid_indexed_topk(
 # Deliberate ground-truth class (perf_class): the exact legs are
 # corpus x query brute-force enumerations — the cost IS the point,
 # as with the containment/prefix-filter verification joins;
-# headline-excluded, class-tagged in bench_full.
+# headline-excluded, class-tagged in the ledger's records.
 # --------------------------------------------------------------------
 
 

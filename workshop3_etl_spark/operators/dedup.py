@@ -1352,7 +1352,8 @@ def dedup_crossdoc_ngram_fraction(
     # Doc frequency via an unordered window count over the shingle
     # partition, NOT a groupBy+join-back: Catalyst cannot CTE a
     # repeated subtree, so the join formulation scans and re-shingles
-    # the corpus TWICE (verified in EXPLAINS — two parquet scans).
+    # the corpus TWICE (two parquet scans; the window's single scan is
+    # pinned by test_crossdoc_ngram_fraction_scans_documents_once).
     # The window rides the single distinct output with one shuffle on
     # sh; identical values.
     wsh = Window.partitionBy("sh")
@@ -1847,10 +1848,11 @@ def substring_run_seeds(docs: DataFrame) -> DataFrame:
     ``transform(sequence(...), i -> struct(i, md5(concat_ws(' ',
     slice(toks, i, K)))))`` — is a higher-order function, which Spark
     evaluates INTERPRETED (CodegenFallback) at a measured ~6 us per
-    expression node per element (tools/probe_seeds2.py: the slice
-    alone cost ~1.5s of the ~2s pass; an element_at formulation was
-    8x worse). The Arrow kernel computes the SAME md5 hex strings over the
-    SAME gram bytes (Python str.split(' ') + filter == the engine's
+    expression node per element (round-11 probe, removed in b7681f9:
+    the slice alone cost ~1.5s of the ~2s pass; an element_at
+    formulation was 8x worse). The Arrow kernel computes the SAME md5
+    hex strings over the SAME gram bytes (Python str.split(' ') +
+    filter == the engine's
     ``filter(split(text, ' '), x -> x != '')`` for the single-space
     delimiter; hashlib.md5 over UTF-8 == Spark md5 == DuckDB md5), so
     the seeds frame is bit-identical by construction — the declared

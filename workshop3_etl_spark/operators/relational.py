@@ -88,7 +88,7 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-disabling on healthy layouts, where the scan's own splits
     parallelize the partial agg and no repartition fires). The
     shipdate filter still pushes through the exchange to the scan
-    (verified in plans/r10)."""
+    (tests/test_plans.py::test_q6_filter_pushdown)."""
     from workshop3_etl_spark.sources.tables import scan_parallel
 
     li = scan_parallel(spark, sf_dir, "lineitem")

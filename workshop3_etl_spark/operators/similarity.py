@@ -1460,10 +1460,11 @@ def _rad_signatures_arrow(emb: DataFrame) -> DataFrame:
 
     r11 session 2: the fold expressions are higher-order functions,
     which Spark evaluates interpreted at a measured ~6 us per
-    expression node per element (tools/probe_seeds2.py); the 72 folds
-    x 64 elements were the operator's heaviest stage even after
-    scan_parallel. Here each batch computes every fold with numpy in
-    EXACTLY the engine's IEEE order: products are
+    expression node per element (round-11 probe, removed in
+    b7681f9); the 72 folds x 64 elements were the operator's
+    heaviest stage even after scan_parallel. Here each batch
+    computes every fold with numpy in EXACTLY the engine's IEEE
+    order: products are
     double(x) * double(+/-1) (a sign flip — exact), and the
     accumulator adds column j in ascending j via one vectorized add
     per dimension, which is bit-identical to the sequential
@@ -1621,7 +1622,7 @@ def _neardup_lsh_plan(
     # with id-rank chunking at the same budget. Cross-window pairs
     # are the (logged) residual recall loss; the cap is the dial.
     # Multi-probe LSH (flip one primary-band bit) was measured and
-    # rejected (tools/exp_neardup_multiprobe.py): of the lost pairs,
+    # rejected (round-11 probe, removed in b7681f9): of the lost pairs,
     # ~2/3 already share a windowed bucket (probing can't help) and
     # only 4/144 are Hamming-1 in any table — +4 pairs for a 5x
     # probe-side join multiplier. On flat corpora the principled

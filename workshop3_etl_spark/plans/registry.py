@@ -36,8 +36,8 @@ class RegisteredQuery:
     # production corpus job would run, held to the normal regression
     # thresholds; "ground_truth" = a deliberate exact-enumeration eval
     # harness (e.g. the filter-free containment join that verifies the
-    # LSH screen) whose cost is the point — bench tooling reports it
-    # separately and never gates on it.
+    # LSH screen) whose cost is the point — tools/ledger.py records the
+    # class with each query, and no bench gates on it.
     perf_class: str = "pipeline"
 
 
@@ -247,15 +247,6 @@ def queries() -> dict[str, QueryFn]:
 
 def oracles() -> dict[str, str]:
     return {q.name: q.oracle for q in _ordered() if q.oracle is not None}
-
-
-def perf_classes() -> dict[str, str]:
-    """Non-default bench classes only (pipeline is the default)."""
-    return {
-        q.name: q.perf_class
-        for q in _ordered()
-        if q.perf_class != "pipeline"
-    }
 
 
 def get(name: str) -> RegisteredQuery:

@@ -19,9 +19,8 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# module-level binding (not call-time import) so tools/dump_plans.py
-# can stub THIS module's checkpoint helpers without touching the
-# iterative operators' lineage cuts
+# module-level binding (not call-time import): tracers and plan tests
+# wrap or stub the checkpoint helpers at every module binding
 from workshop3_etl_spark.functions.cache import (
     materialize_and_release,
     tracked_local_checkpoint,

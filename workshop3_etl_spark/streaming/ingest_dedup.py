@@ -62,7 +62,7 @@ AUDIT_COLS = ("doc_a", "doc_b")
 
 
 def _read_or_none(spark: SparkSession, path: str) -> DataFrame | None:
-    """Read the index, or None ONLY when it does not exist yet.
+    """Read a table, or None ONLY when it does not exist yet.
 
     Any other read failure (corrupt footer, transient FS error,
     permissions) must propagate and fail the micro-batch so the
@@ -177,14 +177,25 @@ def maintain_ingest_dedup(
     )
 
 
+def _read_distinct(
+    spark: SparkSession, path: str, cols: tuple[str, ...]
+) -> DataFrame:
+    """Distinct ``cols`` of a table; no rows when nothing was written
+    (an empty epoch writes no partition)."""
+    df = _read_or_none(spark, path)
+    if df is None:
+        return spark.createDataFrame([], ", ".join(f"{c} BIGINT" for c in cols))
+    return df.select(*cols).distinct()
+
+
 def read_admitted_ids(spark: SparkSession, index_path: str) -> DataFrame:
     """Distinct admitted doc_ids from the index (one row per doc)."""
-    return read_live(spark, index_path).select("doc_id").distinct()
+    return _read_distinct(spark, index_path, ("doc_id",))
 
 
 def read_audit_pairs(spark: SparkSession, audit_path: str) -> DataFrame:
     """Distinct flagged near-dup pairs across all epochs."""
-    return read_live(spark, audit_path).select(*AUDIT_COLS).distinct()
+    return _read_distinct(spark, audit_path, AUDIT_COLS)
 
 
 def compact_index(
